@@ -85,9 +85,9 @@ class CrawlSpec:
     round_budget_s: float = 3600.0
     seen_shards: int = 16
     seen_bits_per_shard: int = 1 << 20
-    # URL-seen prefilter kind: "bloom" (packed bitmaps) or "cuckoo"
-    # ((2,4) fingerprint tables — deletion-capable; north rule names
-    # both). Same no-false-negative + exact-confirm contract.
+    # URL-seen prefilter kind; "bloom" (packed bitmaps) is the only
+    # one. Kept as a field so config_hash, and with it every existing
+    # checkpoint root, stays unchanged.
     seen_filter: str = "bloom"
     # transient-failure retry (reference: 3 retries with 60s backoff,
     # Matching_P1.py:298-327); retry_max=0 disables re-enqueueing
@@ -336,14 +336,7 @@ class CrawlEngine:
         robots: DataFrame | None = None,
         partitions: int | None = None,
         fetcher=None,
-        cuckoo_compact_threshold: float | None = 0.95,
     ):
-        # cuckoo_compact_threshold: auto-compact cuckoo seen shards
-        # whose load factor exceeds this (or that saturated) at round
-        # commit boundaries — retry/speculation double-inserts inflate
-        # load invisibly otherwise (ADVICE r3). Execution policy, not
-        # crawl semantics, so deliberately OUTSIDE config_hash (like
-        # max_rounds); None disables. No-op under the Bloom filter.
         self.spark = spark
         self.spec = spec
         self.store = CheckpointStore(spark, checkpoint_root)
@@ -356,7 +349,6 @@ class CrawlEngine:
             filter_kind=spec.seen_filter,
         )
         self.partitions = partitions or spark.sparkContext.defaultParallelism
-        self.cuckoo_compact_threshold = cuckoo_compact_threshold
         self._matched_ids: set[int] = set()
         # the driver-held matched-id mirror is only trusted when run()
         # has seeded it (fresh run or small-table resume); otherwise
@@ -437,7 +429,8 @@ class CrawlEngine:
         exactly once, bypassing the matched gate like retry_next
         does. Only valid after run() folded the round's delta into
         the mirror; equality is pytest-pinned across the replay grid."""
-        assert self._mirror_valid, "fast count requires the driver mirror"
+        if not self._mirror_valid:
+            raise ValueError("fast count requires the driver mirror")
         spec = self.spec
         base = fetched.where(
             (F.col("status") == 200) & (F.col("depth") < spec.max_depth)
@@ -897,27 +890,6 @@ class CrawlEngine:
         round_entry["phase_sec"] = {
             **round_entry.get("phase_sec", {}), "commit_wait": wait,
         }
-        if self.seen.filter_kind == "cuckoo":
-            # visibility + auto-compaction at the commit boundary
-            # (ADVICE r3): stats are O(sidecar bytes) driver reads
-            # — cheap at test scale, an explicit per-checkpoint
-            # cost the 4096-shard design point budgets for
-            stats = self.seen.sidecar_stats()
-            if stats:
-                round_entry["seen_max_load"] = max(
-                    s["load_factor"] for s in stats
-                )
-                round_entry["seen_saturated_shards"] = sum(
-                    1 for s in stats if s["saturated"]
-                )
-                thr = self.cuckoo_compact_threshold
-                if thr is not None and (
-                    round_entry["seen_saturated_shards"]
-                    or round_entry["seen_max_load"] > thr
-                ):
-                    round_entry["seen_compacted_shards"] = len(
-                        self.seen.compact(thr)
-                    )
         summary["rounds"].append(round_entry)
         if pending["prev_fetched"] is not None:
             pending["prev_fetched"].unpersist()
@@ -1052,18 +1024,22 @@ class CrawlEngine:
                 # filter nor its first-row window changes the result)
                 # — so read the hit rows straight off the checkpointed
                 # fetch: a narrow single-stage collect instead of the
-                # delta's window+filter job. Rows collected are
-                # bounded by this round's hit pages (≥ the delta's
-                # 1-per-seed, same order of magnitude); the
-                # matched_mirror_limit invalidation above still caps
-                # driver state at the design point.
+                # delta's window+filter job. Hit rows of seeds the
+                # mirror already holds are dropped before the collect
+                # (an isin/broadcast filter in the same stage, no
+                # extra job), so driver transfer is bounded by this
+                # round's newly matched seeds' hit pages even with
+                # early_exit off; the matched_mirror_limit
+                # invalidation below still caps driver state at the
+                # design point.
                 if self._mirror_valid:
+                    hits = fetched.where(
+                        (F.col("status") == 200)
+                        & (F.col("target_number") != "")
+                    )
                     new_ids = [
                         r[0]
-                        for r in fetched.where(
-                            (F.col("status") == 200)
-                            & (F.col("target_number") != "")
-                        )
+                        for r in self._filter_unmatched(hits, None)
                         .select("seed_id")
                         .collect()
                     ]

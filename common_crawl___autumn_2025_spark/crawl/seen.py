@@ -10,12 +10,10 @@ equivalent is:
   surt STRING, first_round INT)``, hash-sharded by
   ``pmod(xxhash64(surt), n_shards)`` (a JVM projection — see
   ``shard_expr``);
-- a per-shard probabilistic-prefilter sidecar — PACKED Bloom bitmaps
-  by default, or (2,4)-cuckoo fingerprint tables
-  (``filter_kind="cuckoo"``; the north rule names both) — built and
-  merged entirely by executor tasks (each shard's rows land in one
-  task, which read-modify-writes its own ``shard=N.npy`` under
-  tmp+rename), used as a cheap *prefilter* for the anti-join. The
+- a per-shard PACKED Bloom-bitmap sidecar, built and merged entirely
+  by executor tasks (each shard's rows land in one task, which
+  read-modify-writes its own ``shard=N.npy`` under tmp+rename), used
+  as a cheap *prefilter* for the anti-join. The
   driver never holds bitmap bytes — at the 4096-shard design point
   that path would move GBs per round through ``collect()``.
 
@@ -52,8 +50,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .cuckoo import _FP_HASH, CuckooShard
-from .cuckoo import probe_packed_vec as cuckoo_probe_vec
 from .hashing import bloom_positions_vec, h1_from_int64, xxh64_str
 
 SEEN_SCHEMA = "shard int, surt string, first_round int"
@@ -124,28 +120,21 @@ class SeenSet:
         n_hashes: int = 5,
         filter_kind: str = "bloom",
     ):
-        """``filter_kind``: "bloom" (packed bitmaps, default) or
-        "cuckoo" ((2,4)-cuckoo fingerprint tables, ``cuckoo.py`` —
-        the north rule's alternative; supports deletion and answers
-        *maybe*-only when saturated). Both are prefilters with the
-        identical no-false-negative + exact-confirm contract, sized
-        to the same per-shard memory (``bits_per_shard``/8 bytes)."""
+        """``filter_kind`` must be "bloom", the only prefilter; the
+        parameter stays because ``CrawlSpec.seen_filter`` (hashed into
+        every checkpoint's config) feeds it."""
         if bits_per_shard % 8:
             raise ValueError("bits_per_shard must be a multiple of 8 (packed sidecars)")
-        if filter_kind not in ("bloom", "cuckoo"):
-            raise ValueError(f"unknown filter_kind {filter_kind!r}")
+        if filter_kind != "bloom":
+            raise ValueError(
+                f"unknown filter_kind {filter_kind!r}: only 'bloom' is "
+                "supported (the cuckoo prefilter was removed)"
+            )
         self.spark = spark
         self.path = path
         self.n_shards = n_shards
         self.bits = bits_per_shard
         self.k = n_hashes
-        self.filter_kind = filter_kind
-        # cuckoo table with the same byte budget as the packed bloom:
-        # bits/8 bytes = n_buckets * 4 slots * 1 byte -> bits/32
-        # buckets, rounded down to a power of two (xor-partial-key);
-        # floor of 8 buckets (bits_per_shard < 256 would otherwise
-        # shift by a negative count)
-        self.cuckoo_buckets = 1 << max(3, (bits_per_shard // 32).bit_length() - 1)
         self._bitmaps: dict[int, np.ndarray] | None = None
         os.makedirs(os.path.join(path, "bloom"), exist_ok=True)
 
@@ -155,15 +144,10 @@ class SeenSet:
         """One line that pins everything a probe's correctness depends
         on: layout version, filter kind, geometry, hash derivation. A
         sidecar directory written under ANY other spec (the pre-v2
-        bool bitmaps, blake2b positions, different bits/buckets) would
+        bool bitmaps, blake2b positions, different bits) would
         silently probe FALSE on keys it contains — a false negative —
         so incompatible state fails loudly instead (ADVICE r3)."""
-        geom = (
-            f"bits={self.bits} k={self.k}"
-            if self.filter_kind == "bloom"
-            else f"buckets={self.cuckoo_buckets} slots=4"
-        )
-        return f"v2 {self.filter_kind} {geom} hash=xxh64-mix64"
+        return f"v2 bloom bits={self.bits} k={self.k} hash=xxh64-mix64"
 
     def _format_file(self) -> str:
         return os.path.join(self.path, "bloom", "FORMAT")
@@ -194,40 +178,6 @@ class SeenSet:
             with open(tmp, "w") as fh:
                 fh.write(self._format_spec() + chr(10))
             os.replace(tmp, f)
-
-    # -- crash-recoverable sidecar rebuilds --------------------------------
-
-    def _pending_file(self) -> str:
-        return os.path.join(self.path, "bloom", "REBUILD_PENDING")
-
-    def _complete_pending_rebuilds(self) -> None:
-        """Finish a rebuild a crash interrupted. ``rollback`` marks the
-        shards it is about to rebuild in a durable REBUILD_PENDING file
-        BEFORE removing their sidecars; without the marker, a crash
-        after the removes would leave shards with exact rows but no
-        sidecar, which ``filter_unseen`` reads as definitely-unseen —
-        false negatives (ADVICE r3, medium). Re-running is idempotent:
-        remove whatever the listed shards have (missing, stale, or
-        half-rebuilt sidecars are all overwritten), rebuild from the
-        exact table, then clear the marker."""
-        import json
-
-        pf = self._pending_file()
-        if not os.path.exists(pf):
-            return
-        with open(pf) as fh:
-            shards = json.load(fh)
-        for shard in shards:
-            try:
-                os.remove(self._bloom_file(shard))
-            except FileNotFoundError:
-                pass
-        if self._has_exact() and shards:
-            self._rebuild_sidecars(
-                self.exact_df().where(F.col("shard").isin(shards))
-            )
-        os.remove(pf)
-        self._bitmaps = None
 
     # -- exact table ---------------------------------------------------
 
@@ -294,10 +244,8 @@ class SeenSet:
         the caller guarantees unique non-null surts (the crawl round
         does: candidates are surt-deduped upstream).
         """
-        self._complete_pending_rebuilds()
         self._check_format(create=True)
         n_shards, bits, k = self.n_shards, self.bits, self.k
-        kind, n_buckets = self.filter_kind, self.cuckoo_buckets
         bloom_dir = os.path.join(self.path, "bloom")
         write_parts = min(
             n_shards, self.spark.sparkContext.defaultParallelism
@@ -310,19 +258,16 @@ class SeenSet:
             delta = delta.distinct()
 
         def shard_and_sidecar(batches):
-            """Build this task's per-shard filter deltas and publish
+            """Build this task's per-shard Bloom deltas and publish
             the sidecar files before the final yield — the parquet
             writer consuming this generator then commits the rows.
             Each shard is owned by exactly one task (upstream hash
             repartition on shard), so the read-modify-write below has
             no concurrent writer except a speculative duplicate of
-            *this same task* (idempotent for Bloom's OR; for cuckoo a
-            duplicate insert only raises the load factor — probes
-            stay correct either way)."""
-            # per-shard h1 batches: all positions/fingerprints derive
-            # from the precomputed xxhash64 column — this Python stage
-            # hashes NO strings (vectorized numpy indexing only; the
-            # cuckoo insert's eviction walk is per-key but hash-free)
+            *this same task* (idempotent: Bloom's OR)."""
+            # per-shard h1 batches: all positions derive from the
+            # precomputed xxhash64 column — this Python stage hashes
+            # NO strings (vectorized numpy indexing only)
             per_shard: dict[int, list[np.ndarray]] = {}
             for pdf in batches:
                 if len(pdf) == 0:
@@ -339,27 +284,14 @@ class SeenSet:
             for shard, chunks in per_shard.items():
                 h1 = np.concatenate(chunks)
                 f = os.path.join(bloom_dir, f"shard={shard}.npy")
-                if kind == "bloom":
-                    # sidecars are stored PACKED (uint8, np.packbits
-                    # layout): 8x smaller on disk/broadcast, and the
-                    # OR-merge works directly on packed bytes
-                    bitmap = np.zeros(bits, dtype=bool)
-                    bitmap[bloom_positions_vec(h1, bits, k).ravel()] = True
-                    out = np.packbits(bitmap)
-                    if os.path.exists(f):
-                        out = np.load(f) | out
-                else:
-                    from .hashing import cuckoo_parts_vec
-
-                    cf = (
-                        CuckooShard.from_array(np.load(f))
-                        if os.path.exists(f)
-                        else CuckooShard(n_buckets)
-                    )
-                    fp, i1, i2 = cuckoo_parts_vec(h1, n_buckets, _FP_HASH)
-                    for j in range(len(fp)):
-                        cf.insert_parts(int(fp[j]), int(i1[j]), int(i2[j]))
-                    out = cf.to_array()
+                # sidecars are stored PACKED (uint8, np.packbits
+                # layout): 8x smaller on disk/broadcast, and the
+                # OR-merge works directly on packed bytes
+                bitmap = np.zeros(bits, dtype=bool)
+                bitmap[bloom_positions_vec(h1, bits, k).ravel()] = True
+                out = np.packbits(bitmap)
+                if os.path.exists(f):
+                    out = np.load(f) | out
                 tmp = os.path.join(
                     bloom_dir, f".tmp.shard={shard}.{os.getpid()}.npy"
                 )
@@ -394,57 +326,25 @@ class SeenSet:
 
     def rollback(self, last_good_round: int) -> None:
         """Drop seen rows from rounds after ``last_good_round`` and
-        restore the prefilter sidecars to match.
+        rebuild the Bloom sidecars to match.
 
         Used on resume: a crash between the seen append and the
         checkpoint commit may leave a partial round in the exact
         table; rollback restores the seen set to exactly the last
-        committed snapshot (byte-identical resume contract).
+        committed snapshot (byte-identical resume contract). Bloom
+        bits can't be un-set, so every shard's sidecar is rebuilt
+        from the surviving exact rows.
 
-        Bloom path: full per-shard rebuild from the surviving exact
-        rows (bits can't be un-set). Cuckoo path: INCREMENTAL — the
-        rolled-back rounds' rows are read with partition pruning
-        (``first_round > R`` directories only), materialized, and
-        their fingerprints DELETED from each shard's sidecar, so
-        rollback cost is O(rows of the rolled-back rounds) instead of
-        O(total seen set) — the structural payoff of the cuckoo
-        filter at the 10^10 design point. Saturated shards (deletes
-        unreliable there: a failed insert left some key without a
-        stored copy) and any shard whose delete misses fall back to
-        the full rebuild. Crash-safety ordering: exact partitions are
-        deleted BEFORE sidecar updates run (on the pre-materialized
-        rows), so a re-run after any crash finds nothing to delete
-        and at worst leaves STALE fingerprints — extra *maybe*s,
-        never a false negative.
+        Crash safety: a crash after the sidecars are removed but
+        before the rebuild lands leaves exact rows without a sidecar,
+        which ``filter_unseen`` would read as definitely-unseen. No
+        marker is needed: ``CrawlEngine.run(resume=True)`` calls this
+        method — removal and full rebuild included — on every resume
+        before its first probe, so the next resume repairs it.
         """
-        self._complete_pending_rebuilds()
         if not self._has_exact():
             return
         import shutil
-
-        rolled = None
-        if self.filter_kind == "cuckoo":
-            try:
-                # the incremental delete derives fingerprints/buckets
-                # under THIS SeenSet's geometry+hash — running it
-                # against sidecars written under any other spec could
-                # remove a surviving key's entry (a false negative).
-                # Incompatible state degrades to the full rebuild
-                # below, which regenerates everything under the
-                # current spec.
-                self._check_format()
-            except ValueError:
-                rolled = None
-            else:
-                rolled = (
-                    self.exact_df()
-                    .where(F.col("first_round") > last_good_round)
-                    .select("shard", "surt")
-                    .localCheckpoint(eager=True)  # materialize BEFORE
-                    # the file deletes below (the scan is
-                    # partition-pruned to the rolled-back first_round
-                    # directories)
-                )
 
         # partition layout shard=S/first_round=R -> rollback is a
         # filesystem delete, no table rewrite
@@ -461,46 +361,6 @@ class SeenSet:
                     if rnd > last_good_round:
                         shutil.rmtree(os.path.join(sd, rd), ignore_errors=True)
 
-        if rolled is not None:
-            rebuild_shards = self._cuckoo_delete_keys(rolled)
-            rolled.unpersist()
-            if rebuild_shards:
-                # drop the flagged shards' sidecars BEFORE the rebuild:
-                # a rebuild-flagged shard whose every row was rolled
-                # back has no surviving group in the rebuild job, and
-                # leaving its (possibly saturated) table behind would
-                # answer *maybe* forever. No-rows shards simply end
-                # with no sidecar — correct, since they have nothing
-                # to be positive about; add() recreates it on the next
-                # insert.
-                #
-                # CRASH SAFETY: a durable REBUILD_PENDING marker is
-                # published (tmp+rename) BEFORE the removes — a crash
-                # anywhere between here and the rebuild's completion
-                # would otherwise leave a shard with exact rows but no
-                # sidecar, which probes as definitely-unseen (false
-                # negatives). On the next add/rollback/probe,
-                # _complete_pending_rebuilds re-runs the rebuild from
-                # the exact table and only then clears the marker.
-                import json
-
-                pf = self._pending_file()
-                tmp = pf + f".tmp.{os.getpid()}"
-                with open(tmp, "w") as fh:
-                    json.dump(sorted(rebuild_shards), fh)
-                os.replace(tmp, pf)
-                for shard in rebuild_shards:
-                    try:
-                        os.remove(self._bloom_file(shard))
-                    except FileNotFoundError:
-                        pass
-                self._rebuild_sidecars(
-                    self.exact_df().where(F.col("shard").isin(rebuild_shards))
-                )
-                os.remove(pf)
-            self._bitmaps = None
-            return
-
         shutil.rmtree(os.path.join(self.path, "bloom"), ignore_errors=True)
         os.makedirs(os.path.join(self.path, "bloom"), exist_ok=True)
         self._rebuild_sidecars(self.exact_df())
@@ -512,34 +372,15 @@ class SeenSet:
         cross the driver even for a full-set rebuild."""
         self._check_format(create=True)
         bits, k = self.bits, self.k
-        kind, n_buckets = self.filter_kind, self.cuckoo_buckets
         bloom_dir = os.path.join(self.path, "bloom")
         rows = rows.withColumn("__h1", h1_expr("surt"))
 
         def build_bitmap(key, pdf: pd.DataFrame) -> pd.DataFrame:
             shard = int(key[0])
-            # one sidecar copy PER EXACT ROW, deliberately not
-            # deduped: the incremental cuckoo delete removes one copy
-            # per rolled-back ROW, so the copy-count invariant
-            # (sidecar copies == exact rows per key) is what makes a
-            # delete of one row's copy leave a surviving duplicate
-            # row's copy intact. Retry/speculation double-inserts
-            # never reach the exact table (parquet commits exactly
-            # one task attempt), so a rebuild from it still sheds
-            # exactly the sidecar-only surplus compact() targets.
             h1 = h1_from_int64(pdf["__h1"].to_numpy())
-            if kind == "bloom":
-                bitmap = np.zeros(bits, dtype=bool)
-                bitmap[bloom_positions_vec(h1, bits, k).ravel()] = True
-                out = np.packbits(bitmap)
-            else:
-                from .hashing import cuckoo_parts_vec
-
-                cf = CuckooShard(n_buckets)
-                fp, i1, i2 = cuckoo_parts_vec(h1, n_buckets, _FP_HASH)
-                for j in range(len(fp)):
-                    cf.insert_parts(int(fp[j]), int(i1[j]), int(i2[j]))
-                out = cf.to_array()
+            bitmap = np.zeros(bits, dtype=bool)
+            bitmap[bloom_positions_vec(h1, bits, k).ravel()] = True
+            out = np.packbits(bitmap)
             tmp = os.path.join(bloom_dir, f".tmp.shard={shard}.{os.getpid()}.npy")
             with open(tmp, "wb") as fh:
                 np.save(fh, out)
@@ -553,73 +394,6 @@ class SeenSet:
             .mode("overwrite")
             .save()
         )
-
-    def _cuckoo_delete_keys(self, rolled: DataFrame) -> list[int]:
-        """Delete the rolled-back keys' fingerprints from their shard
-        sidecars. Returns the shards that need a full rebuild instead:
-        saturated ones (deletes unreliable — a failed insert left some
-        key without a stored copy, so removing a shared fingerprint
-        could create a false negative) and any shard where a delete
-        found no copy.
-
-        RETRY SAFETY: deletion is NOT idempotent (a task retry
-        re-deleting from an already-updated sidecar could remove a
-        *surviving* key's shared fingerprint — a false negative), so
-        tasks never modify the live sidecar. Each task derives its
-        updated table from the ORIGINAL sidecar and writes it to a
-        staging directory; a retry recomputes the identical staged
-        file. The DRIVER publishes the staged files with atomic
-        renames only after the job has fully succeeded. A crash
-        before/among the renames leaves original/stale sidecars —
-        extra *maybe*s only."""
-        bloom_dir = os.path.join(self.path, "bloom")
-        stage_dir = os.path.join(bloom_dir, ".rollback-stage")
-        import shutil as _shutil
-
-        _shutil.rmtree(stage_dir, ignore_errors=True)
-        os.makedirs(stage_dir, exist_ok=True)
-
-        n_buckets = self.cuckoo_buckets
-        rolled = rolled.withColumn("__h1", h1_expr("surt"))
-
-        def drop_keys(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            from .hashing import cuckoo_parts_vec
-
-            shard = int(key[0])
-            f = os.path.join(bloom_dir, f"shard={shard}.npy")
-            if not os.path.exists(f):
-                return pd.DataFrame({"shard": [shard], "rebuild": [False]})
-            cf = CuckooShard.from_array(np.load(f))
-            if cf.saturated:
-                return pd.DataFrame({"shard": [shard], "rebuild": [True]})
-            h1 = h1_from_int64(pdf["__h1"].to_numpy())
-            fp, i1, i2 = cuckoo_parts_vec(h1, n_buckets, _FP_HASH)
-            missing = sum(
-                0 if cf.delete_parts(int(fp[j]), int(i1[j]), int(i2[j])) else 1
-                for j in range(len(fp))
-            )
-            if missing:
-                return pd.DataFrame({"shard": [shard], "rebuild": [True]})
-            tmp = os.path.join(stage_dir, f".tmp.shard={shard}.{os.getpid()}.npy")
-            with open(tmp, "wb") as fh:
-                np.save(fh, cf.to_array())
-            os.replace(tmp, os.path.join(stage_dir, f"shard={shard}.npy"))
-            return pd.DataFrame({"shard": [shard], "rebuild": [False]})
-
-        acks = (
-            rolled.groupBy("shard")
-            .applyInPandas(drop_keys, schema="shard int, rebuild boolean")
-            .collect()
-        )
-        # job fully succeeded: publish the staged sidecars
-        for name in os.listdir(stage_dir):
-            if name.startswith("shard="):
-                os.replace(
-                    os.path.join(stage_dir, name),
-                    os.path.join(bloom_dir, name),
-                )
-        _shutil.rmtree(stage_dir, ignore_errors=True)
-        return [r.shard for r in acks if r.rebuild]
 
     # -- bloom sidecar ---------------------------------------------------
 
@@ -644,91 +418,19 @@ class SeenSet:
     _POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 
     def sidecar_stats(self) -> list[dict]:
-        """Per-shard sidecar health — driver-side diagnostics for the
-        ADVICE-r3 visibility gap: cuckoo duplicate inserts (task
-        retries/speculation) silently inflate load until shards
-        saturate and every probe answers *maybe*. Bloom: bit-fill
-        fraction (FP rate ~ fill^k). Cuckoo: load factor + saturation
-        flag — compact (rebuild from the exact table via ``rollback``
-        or re-shard) when load approaches ~0.95.
-
-        Cost is O(total sidecar bytes) of driver reads: free at the
-        16-shard test scale, a deliberate, occasional operation at the
-        4096-shard design point (call it at checkpoint boundaries, not
-        per round)."""
+        """Per-shard Bloom bit-fill fraction (FP rate ~ fill^k) —
+        driver-side diagnostics. Cost is O(total sidecar bytes) of
+        driver reads: free at the 16-shard test scale, a deliberate,
+        occasional operation at the 4096-shard design point (call it
+        at checkpoint boundaries, not per round)."""
         out = []
         for shard in range(self.n_shards):
             f = self._bloom_file(shard)
             if not os.path.exists(f):
                 continue
-            arr = np.load(f)
-            if self.filter_kind == "bloom":
-                fill = float(self._POPCOUNT8[arr].sum()) / float(self.bits)
-                out.append(
-                    {"shard": shard, "kind": "bloom",
-                     "fill": round(fill, 6), "saturated": False}
-                )
-            else:
-                load = float((arr[1:] != 0).mean())
-                out.append(
-                    {"shard": shard, "kind": "cuckoo",
-                     "load_factor": round(load, 6),
-                     "saturated": bool(arr[0])}
-                )
+            fill = float(self._POPCOUNT8[np.load(f)].sum()) / float(self.bits)
+            out.append({"shard": shard, "fill": round(fill, 6)})
         return out
-
-    def compact(self, load_threshold: float = 0.95) -> list[int]:
-        """Rebuild over-loaded or saturated CUCKOO shards from the
-        exact table; returns the shard ids rebuilt.
-
-        Why this exists (ADVICE r3): cuckoo ``add`` is not idempotent
-        under task retries/speculation — duplicate inserts inflate a
-        shard's load factor permanently, and a shard pushed into
-        saturation answers *maybe* for every probe (correct but every
-        probe then pays the exact-confirm join). The exact table IS
-        idempotent (same parquet rows), so rebuilding a shard from it
-        sheds exactly the duplicate copies and clears a
-        duplicates-only saturation. A shard whose TRUE key count
-        exceeds capacity re-saturates in the rebuild — correct, and
-        the signal to re-shard.
-
-        Crash safety: same durable REBUILD_PENDING protocol as
-        ``rollback`` — the marker is published before any sidecar is
-        removed, and ``_complete_pending_rebuilds`` finishes the job
-        on the next add/rollback/probe if this process dies mid-way.
-
-        Cost: O(sidecar bytes) driver reads for the stats scan plus
-        one Spark job over the targeted shards' exact rows. Run it at
-        checkpoint boundaries (the engine auto-triggers past
-        ``cuckoo_compact_threshold``), not per batch."""
-        if self.filter_kind != "cuckoo":
-            return []
-        self._complete_pending_rebuilds()
-        targets = sorted(
-            s["shard"]
-            for s in self.sidecar_stats()
-            if s["saturated"] or s["load_factor"] > load_threshold
-        )
-        if not targets or not self._has_exact():
-            return []
-        import json
-
-        pf = self._pending_file()
-        tmp = pf + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
-            json.dump(targets, fh)
-        os.replace(tmp, pf)
-        for shard in targets:
-            try:
-                os.remove(self._bloom_file(shard))
-            except FileNotFoundError:
-                pass
-        self._rebuild_sidecars(
-            self.exact_df().where(F.col("shard").isin(targets))
-        )
-        os.remove(pf)
-        self._bitmaps = None
-        return targets
 
     # -- probe -----------------------------------------------------------
 
@@ -778,18 +480,15 @@ class SeenSet:
         still run (a dedicated Arrow pass), so callers get a uniform
         schema.
         """
-        self._complete_pending_rebuilds()
         bitmaps = self.load_bitmaps()
         n_shards, bits, k = self.n_shards, self.bits, self.k
-        if self.filter_kind == "bloom":
-            def probe_vec(bm: np.ndarray, h1: np.ndarray) -> np.ndarray:
-                """Vectorized packed-Bloom membership: fancy-indexed
-                byte gather + mask, no per-key Python."""
-                pos = bloom_positions_vec(h1, bits, k)
-                mask = (128 >> (pos & 7)).astype(np.uint8)
-                return ((bm[pos >> 3] & mask) != 0).all(axis=1)
-        else:
-            probe_vec = cuckoo_probe_vec
+
+        def probe_vec(bm: np.ndarray, h1: np.ndarray) -> np.ndarray:
+            """Vectorized packed-Bloom membership: fancy-indexed byte
+            gather + mask, no per-key Python."""
+            pos = bloom_positions_vec(h1, bits, k)
+            mask = (128 >> (pos & 7)).astype(np.uint8)
+            return ((bm[pos >> 3] & mask) != 0).all(axis=1)
         flag_cols = [
             c.strip().split()[0] for c in flags_schema.split(",") if c.strip()
         ]

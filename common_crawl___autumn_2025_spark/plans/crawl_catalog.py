@@ -102,32 +102,6 @@ def c03_snapshot_lineage(spark, sf_dir):
     ).orderBy("round")
 
 
-@register("c04_crawl_cuckoo_seen")  # rows-only: alternative prefilter
-def c04_crawl_cuckoo_seen(spark, sf_dir):
-    """The same crawl loop with the CUCKOO URL-seen prefilter
-    (CrawlSpec.seen_filter='cuckoo' — the north rule names
-    'Bloom/cuckoo'). The prefilter kind is semantically invisible, so
-    this fetch log is value-identical to c01's (pinned by the replay
-    pytest for both kinds); the driver row proves the cuckoo path
-    runs end to end."""
-    spec = CrawlSpec(
-        web=syn.WebConfig(n_hosts=12), max_depth=1, max_rounds=2,
-        seen_filter="cuckoo",
-    )
-    seeds = syn.seed_urls(spec.web, 10)
-    root = tempfile.mkdtemp(prefix="cat_cuckoo_")
-    eng = CrawlEngine(spark, spec, root, partitions=8)
-    eng.run(seeds)
-    latest = eng.store.latest_round()
-    logs = None
-    for r in range(latest + 1):
-        t = eng.store.read_table(r, "fetch_log").select(
-            "round", "host", "seq", "surt", "status"
-        )
-        logs = t if logs is None else logs.unionByName(t)
-    return logs.orderBy("round", "host", "seq")
-
-
 @register("c05_robots_table_live")  # rows-only: transport fetch path
 def c05_robots_table_live(spark, sf_dir):
     """Live robots.txt ingestion (crawl/robots.py) driven end to end

@@ -22,6 +22,12 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# the directory that holds this package; Python workers start in the
+# JVM's working directory, so without it on their path every executor
+# side unpickle of an engine function fails with ModuleNotFoundError
+# unless the process happened to start at the repo root
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "common_crawl_spark",
@@ -65,9 +71,21 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _add_worker_path(spark.sparkContext)
     if os.environ.get("SPARK_GRAFT_WARM_SESSION", "1") != "0":
         _warm_session(spark, cores)
     return spark
+
+
+def _add_worker_path(sc) -> None:
+    """Append the package's parent directory to the Python workers'
+    ``PYTHONPATH``. ``sc.environment`` is the driver-side copy of the
+    ``spark.executorEnv.*`` settings that every Python function ships
+    to its workers, so this keeps any value the caller set (builder
+    config, ``--conf``, spark-defaults) and adds to it."""
+    parts = [p for p in sc.environment.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PKG_PARENT not in parts:
+        sc.environment["PYTHONPATH"] = os.pathsep.join(parts + [_PKG_PARENT])
 
 
 _WARMED: set[int] = set()

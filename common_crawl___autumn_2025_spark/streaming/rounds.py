@@ -386,7 +386,7 @@ def stream_first_occurrence_dedup(
     watermark_delay: str | None = None,
 ) -> DataFrame:
     """STREAMING STATEFUL DEDUP (SURVEY §2.9's seen-set, in true
-    Structured Streaming form — the crawl engine's Bloom/cuckoo seen
+    Structured Streaming form — the crawl engine's Bloom seen
     store is the batch-round expression of the same operator): keep
     the FIRST event per (user_id, event_type) across micro-batches
     via ``dropDuplicatesWithinWatermark``, the variant whose state the

@@ -69,3 +69,57 @@ def test_fast_count_and_mirror_collect_equivalences(spark, kwargs):
         assert rounds >= 1
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_fast_count_refuses_invalid_mirror(spark):
+    """The fast count's precondition is a real check, not an assert
+    that ``python -O`` strips: a fresh engine has no trusted mirror."""
+    root = tempfile.mkdtemp(prefix="fastcount_inv_")
+    try:
+        eng = CrawlEngine(spark, CrawlSpec(), root, partitions=2)
+        assert not eng._mirror_valid
+        with pytest.raises(ValueError, match="driver mirror"):
+            eng._next_frontier_count_fast(spark.range(1))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_broadcast_mirror_regime_under_pending_commit(spark, monkeypatch):
+    """With matched_isin_limit=1 every round past the first matched
+    seed filters through the broadcast anti-join, and the fast count
+    and mirror collect run while the previous round's commit is still
+    in flight. Each round must start from exactly the frontier the
+    previous round committed, and the crawl must equal the default
+    (isin) regime's."""
+    spec = CrawlSpec(web=syn.WebConfig(n_hosts=40), max_depth=2, max_rounds=3)
+    seeds = syn.seed_urls(spec.web, spec.web.n_hosts)
+
+    def crawl():
+        root = tempfile.mkdtemp(prefix="bcast_regime_")
+        try:
+            eng = CrawlEngine(spark, spec, root, partitions=4)
+            eng.run(seeds)
+            latest = eng.store.latest_round()
+            manifests = [eng.store.read_manifest(r) for r in range(latest + 1)]
+            log = sorted(
+                (r.round, r.host, r.seq, r.surt, r.status)
+                for rr in range(latest + 1)
+                for r in eng.store.read_table(rr, "fetch_log").collect()
+            )
+            m = sorted(
+                (r.seed_id, r.surt, r.target_number, r.round)
+                for r in eng.read_matches_cum(latest).collect()
+            )
+            return eng, manifests, log, m
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
+
+    _, _, want_log, want_m = crawl()
+    monkeypatch.setattr(CrawlEngine, "matched_isin_limit", 1)
+    eng, manifests, log, m = crawl()
+    assert eng._matched_df_n is not None  # broadcast side was built
+    assert len(manifests) == spec.max_rounds
+    for prev, cur in zip(manifests, manifests[1:]):
+        assert cur["metrics"]["frontier_in"] == prev["tables"]["frontier"]["rows"]
+    assert log == want_log
+    assert m == want_m

@@ -69,6 +69,21 @@ def small_spec():
     return CrawlSpec(web=syn.WebConfig(n_hosts=12), max_depth=1, max_rounds=3)
 
 
+def _crawl_state(eng):
+    latest = eng.store.latest_round()
+    log = sorted(
+        (r.round, r.host, r.seq, r.surt, r.status)
+        for rr in range(latest + 1)
+        for r in eng.store.read_table(rr, "fetch_log").collect()
+    )
+    seen = sorted(r.surt for r in eng.seen.exact_df().collect())
+    m = sorted(
+        (r.seed_id, r.surt, r.target_number, r.round)
+        for r in eng.read_matches_cum(latest).collect()
+    )
+    return log, seen, m
+
+
 def test_resume_equals_uninterrupted(spark, small_spec):
     """Kill after round 0, resume → identical final state (north rule)."""
     seeds = syn.seed_urls(small_spec.web, 10)
@@ -108,22 +123,7 @@ def test_resume_equals_uninterrupted(spark, small_spec):
 
         resumed = CrawlEngine(spark, small_spec, root_part, partitions=4)
         resumed.run(seeds, resume=True)
-
-        def state(eng):
-            latest = eng.store.latest_round()
-            log = sorted(
-                (r.round, r.host, r.seq, r.surt, r.status)
-                for rr in range(latest + 1)
-                for r in eng.store.read_table(rr, "fetch_log").collect()
-            )
-            seen = sorted(r.surt for r in eng.seen.exact_df().collect())
-            m = sorted(
-                (r.seed_id, r.surt, r.target_number, r.round)
-                for r in eng.read_matches_cum(latest).collect()
-            )
-            return log, seen, m
-
-        assert state(resumed) == state(full)
+        assert _crawl_state(resumed) == _crawl_state(full)
     finally:
         shutil.rmtree(root_full, ignore_errors=True)
         shutil.rmtree(root_part, ignore_errors=True)
@@ -254,145 +254,9 @@ def test_lineage_terminates_on_recommit(spark, small_spec, tmp_path):
     assert [m["round"] for m in chain] == [2, 1, 0]
 
 
-def test_cuckoo_seen_set_filter_and_rollback(spark):
-    """SeenSet(filter_kind='cuckoo'): same membership contract as the
-    Bloom path — no false negatives, exact filter_unseen output,
-    rollback rebuilds the fingerprint tables."""
-    root = tempfile.mkdtemp(prefix="seen_ck_")
-    try:
-        seen = SeenSet(
-            spark, root, n_shards=4, bits_per_shard=1 << 14,
-            filter_kind="cuckoo",
-        )
-        surts = [f"com,site{i:04d})/page/{i % 7}" for i in range(500)]
-        df = spark.createDataFrame([(s,) for s in surts], "surt string")
-        assert seen.add(df, round_no=0) == 500
-        probe = spark.createDataFrame(
-            [(s,) for s in surts[:100]] + [(f"org,new{i})/",) for i in range(50)],
-            "surt string",
-        )
-        out = {r.surt for r in seen.filter_unseen(probe).collect()}
-        assert out == {f"org,new{i})/" for i in range(50)}
-        # incremental add + rollback (fingerprint tables rebuilt)
-        seen.add(
-            spark.createDataFrame([("zz,extra)/",)], "surt string"), 1
-        )
-        seen.rollback(0)
-        out2 = {
-            r.surt
-            for r in seen.filter_unseen(
-                spark.createDataFrame(
-                    [("zz,extra)/",), (surts[0],)], "surt string"
-                )
-            ).collect()
-        }
-        assert out2 == {"zz,extra)/"}
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def test_cuckoo_crawl_replay_identical(spark, small_spec):
-    """Full crawl with the cuckoo URL-seen prefilter replays the
-    oracle exactly (the prefilter kind must be semantically
-    invisible)."""
-    import dataclasses
-
-    from common_crawl___autumn_2025_spark.crawl import oracle
-
-    spec = dataclasses.replace(small_spec, seen_filter="cuckoo")
-    seeds = syn.seed_urls(spec.web, 10)
-    o = oracle.crawl(spec, seeds)
-    root = tempfile.mkdtemp(prefix="ck_cuckoo_")
-    try:
-        eng = CrawlEngine(spark, spec, root, partitions=4)
-        assert eng.seen.filter_kind == "cuckoo"
-        eng.run(seeds)
-        got = sorted(
-            (r.round, r.host, r.seq, r.surt, r.status)
-            for rr in range(eng.store.latest_round() + 1)
-            for r in eng.store.read_table(rr, "fetch_log").collect()
-        )
-        want = sorted((r[0], r[1], r[2], r[3], r[7]) for r in o.fetch_log)
-        assert got == want
-        assert {r.surt for r in eng.seen.exact_df().collect()} == o.seen
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def test_cuckoo_incremental_rollback_deletes_fingerprints(spark):
-    """Cuckoo rollback is INCREMENTAL: the rolled-back keys'
-    fingerprints are deleted from the sidecars (probed directly —
-    the exact-confirm join would mask a no-op), while committed
-    keys stay present."""
-    from common_crawl___autumn_2025_spark.crawl.cuckoo import probe_packed
-
-    root = tempfile.mkdtemp(prefix="seen_ckinc_")
-    try:
-        seen = SeenSet(
-            spark, root, n_shards=2, bits_per_shard=1 << 14,
-            filter_kind="cuckoo",
-        )
-        keep = [f"com,keep{i})/" for i in range(40)]
-        drop = [f"org,drop{i})/" for i in range(40)]
-        seen.add(spark.createDataFrame([(s,) for s in keep], "surt string"), 0)
-        seen.add(spark.createDataFrame([(s,) for s in drop], "surt string"), 1)
-        seen.rollback(0)
-        bitmaps = seen.load_bitmaps()
-        shard_of = {
-            r.surt: r.shard
-            for r in spark.createDataFrame(
-                [(s,) for s in keep + drop], "surt string"
-            ).select("surt", shard_expr("surt", 2).alias("shard")).collect()
-        }
-        for s in keep:
-            assert probe_packed(bitmaps[shard_of[s]], s), s
-        dropped_hits = sum(
-            probe_packed(bitmaps[shard_of[s]], s) for s in drop
-        )
-        # fingerprints removed: at most FP-rate stragglers (8-bit fp,
-        # near-empty table -> expect 0, tolerate 2)
-        assert dropped_hits <= 2, dropped_hits
-        assert {r.surt for r in seen.exact_df().collect()} == set(keep)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def test_cuckoo_rollback_rebuilds_saturated_shards(spark):
-    """A saturated cuckoo shard cannot delete reliably — rollback
-    must fall back to a full rebuild of that shard (and the rebuilt
-    shard, holding only the surviving keys, fits again)."""
-    root = tempfile.mkdtemp(prefix="seen_cksat_")
-    try:
-        # 2 shards x (bits 256 -> 8 buckets x 4 slots = 32 keys max)
-        seen = SeenSet(
-            spark, root, n_shards=2, bits_per_shard=256,
-            filter_kind="cuckoo",
-        )
-        keep = [f"com,k{i})/" for i in range(10)]
-        flood = [f"org,f{i})/" for i in range(300)]  # saturates shards
-        seen.add(spark.createDataFrame([(s,) for s in keep], "surt string"), 0)
-        seen.add(spark.createDataFrame([(s,) for s in flood], "surt string"), 1)
-        bitmaps = seen.load_bitmaps()
-        assert any(arr[0] for arr in bitmaps.values())  # saturated flag
-        seen.rollback(0)
-        out = {
-            r.surt
-            for r in seen.filter_unseen(
-                spark.createDataFrame(
-                    [(s,) for s in keep + flood[:20]], "surt string"
-                )
-            ).collect()
-        }
-        assert out == set(flood[:20])  # keeps filtered, flood unseen again
-        bitmaps = seen.load_bitmaps()
-        assert not any(arr[0] for arr in bitmaps.values())  # rebuilt clean
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 # ---------------------------------------------------------------------------
 # round-4 hardening: shared hash definition, format stamp, crash-safe
-# cuckoo rebuilds, sidecar diagnostics
+# rebuilds, sidecar diagnostics
 # ---------------------------------------------------------------------------
 
 def test_python_xxh64_matches_spark(spark):
@@ -417,9 +281,10 @@ def test_python_xxh64_matches_spark(spark):
 
 
 def test_sidecar_format_stamp_guards_incompatible_state(spark):
-    """A SeenSet refuses sidecars stamped with a different geometry /
-    filter kind, and refuses UNstamped (pre-v2) shard files — both
-    would silently probe false (false negatives) otherwise."""
+    """A SeenSet refuses sidecars stamped with a different geometry,
+    and refuses UNstamped (pre-v2) shard files — both would silently
+    probe false (false negatives) otherwise. The removed cuckoo
+    filter kind is refused at construction."""
     root = tempfile.mkdtemp(prefix="seen_fmt_")
     try:
         seen = SeenSet(spark, root, n_shards=2, bits_per_shard=1 << 12)
@@ -430,12 +295,11 @@ def test_sidecar_format_stamp_guards_incompatible_state(spark):
         other = SeenSet(spark, root, n_shards=2, bits_per_shard=1 << 13)
         with pytest.raises(ValueError, match="incompatible"):
             other.load_bitmaps()
-        wrong_kind = SeenSet(
-            spark, root, n_shards=2, bits_per_shard=1 << 12,
-            filter_kind="cuckoo",
-        )
-        with pytest.raises(ValueError, match="incompatible"):
-            wrong_kind.add(df, round_no=1)
+        with pytest.raises(ValueError, match="cuckoo prefilter was removed"):
+            SeenSet(
+                spark, root, n_shards=2, bits_per_shard=1 << 12,
+                filter_kind="cuckoo",
+            )
 
         # unstamped layout: shard files but no FORMAT file
         import os
@@ -448,115 +312,92 @@ def test_sidecar_format_stamp_guards_incompatible_state(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_cuckoo_rollback_rebuild_crash_recovery(spark):
-    """ADVICE r3 (medium): a crash after rollback removed a
-    rebuild-flagged shard's sidecar must NOT leave that shard
-    probing definitely-unseen on its surviving exact rows. Simulate
-    the crash window (marker written, sidecars removed, rebuild never
-    ran) and assert the next probe first completes the rebuild —
-    zero false negatives."""
-    import json
+def test_rollback_rebuild_crash_recovery(spark, small_spec, monkeypatch):
+    """A crash inside rollback, after the sidecars were removed and
+    before the rebuild landed, leaves exact rows that no sidecar
+    covers (they would probe definitely-unseen). No marker guards
+    that window: the next resume re-runs rollback's full rebuild
+    before any probe, so it must equal the uninterrupted run."""
+    import dataclasses
     import os
 
-    root = tempfile.mkdtemp(prefix="seen_crash_")
+    seeds = syn.seed_urls(small_spec.web, 10)
+    root_full = tempfile.mkdtemp(prefix="ck_rbfull_")
+    root_crash = tempfile.mkdtemp(prefix="ck_rbcrash_")
     try:
-        seen = SeenSet(
-            spark, root, n_shards=2, bits_per_shard=1 << 12,
-            filter_kind="cuckoo",
-        )
-        surts = [f"com,site{i:03d})/" for i in range(200)]
-        df = spark.createDataFrame([(s,) for s in surts], "surt string")
-        seen.add(df, round_no=0)
+        full = CrawlEngine(spark, small_spec, root_full, partitions=4)
+        full.run(seeds)
 
-        # simulate: rollback flagged both shards, crashed mid-rebuild
-        pf = seen._pending_file()
-        with open(pf, "w") as fh:
-            json.dump([0, 1], fh)
-        for shard in (0, 1):
-            os.remove(seen._bloom_file(shard))
-        seen._bitmaps = None
-
-        probe = spark.createDataFrame(
-            [(s,) for s in surts] + [("com,unseen)/x",)], "surt string"
+        # round 0 committed, then a partial round-1 seen append
+        one = dataclasses.replace(small_spec, max_rounds=1)
+        CrawlEngine(spark, one, root_crash, partitions=4).run(seeds)
+        eng = CrawlEngine(spark, small_spec, root_crash, partitions=4)
+        eng.seen.add(
+            spark.createDataFrame([("zz,partial)/",)], "surt string"), 1
         )
-        out = {r.surt for r in seen.filter_unseen(probe).collect()}
-        assert out == {"com,unseen)/x"}  # every seen surt still filtered
-        assert not os.path.exists(pf)  # marker cleared after rebuild
-        assert os.path.exists(seen._bloom_file(0))
-        assert os.path.exists(seen._bloom_file(1))
+
+        real_rebuild = SeenSet._rebuild_sidecars
+        calls = []
+
+        def crash_once(self, rows):
+            calls.append(1)
+            if len(calls) == 1:
+                raise RuntimeError("simulated crash mid-rebuild")
+            return real_rebuild(self, rows)
+
+        monkeypatch.setattr(SeenSet, "_rebuild_sidecars", crash_once)
+        crashed = CrawlEngine(spark, small_spec, root_crash, partitions=4)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            crashed.run(seeds, resume=True)
+        bloom_dir = os.path.join(root_crash, "seen", "bloom")
+        assert not any(f.startswith("shard=") for f in os.listdir(bloom_dir))
+
+        resumed = CrawlEngine(spark, small_spec, root_crash, partitions=4)
+        resumed.run(seeds, resume=True)
+        assert len(calls) == 2
+        assert _crawl_state(resumed) == _crawl_state(full)
     finally:
-        shutil.rmtree(root, ignore_errors=True)
+        shutil.rmtree(root_full, ignore_errors=True)
+        shutil.rmtree(root_crash, ignore_errors=True)
 
 
 def test_sidecar_stats_visibility(spark):
-    """Load-factor / saturation visibility (ADVICE r3): stats expose
-    cuckoo load so operators can compact before shards saturate."""
+    """Per-shard Bloom bit-fill is visible to operators (ADVICE r3)."""
     root = tempfile.mkdtemp(prefix="seen_stats_")
     try:
-        seen = SeenSet(
-            spark, root, n_shards=2, bits_per_shard=1 << 12,
-            filter_kind="cuckoo",
-        )
+        seen = SeenSet(spark, root, n_shards=2, bits_per_shard=1 << 12)
         df = spark.createDataFrame(
             [(f"com,s{i:03d})/",) for i in range(100)], "surt string"
         )
         seen.add(df, round_no=0)
         stats = seen.sidecar_stats()
-        assert len(stats) == 2
-        for st in stats:
-            assert st["kind"] == "cuckoo" and not st["saturated"]
-            assert 0.0 < st["load_factor"] < 0.9
-
-        broot = tempfile.mkdtemp(prefix="seen_statsb_")
-        try:
-            bseen = SeenSet(spark, broot, n_shards=2, bits_per_shard=1 << 12)
-            bseen.add(df, round_no=0)
-            bstats = bseen.sidecar_stats()
-            assert all(0.0 < st["fill"] < 0.5 for st in bstats)
-        finally:
-            shutil.rmtree(broot, ignore_errors=True)
+        assert [st["shard"] for st in stats] == [0, 1]
+        assert all(0.0 < st["fill"] < 0.5 for st in stats)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
 
 def test_double_add_retry_semantics(spark):
-    """Task retries / speculative duplicates re-run sidecar updates.
-    Bloom re-OR is strictly idempotent; cuckoo duplicate inserts
-    inflate load (the documented non-idempotence) but NEVER produce a
-    false negative, and the inflation is visible via sidecar_stats —
-    the operator's compaction signal."""
+    """Task retries / speculative duplicates re-run sidecar updates:
+    Bloom re-OR is strictly idempotent (bit-fill unchanged) and never
+    produces a false negative."""
     surts = [f"com,retry{i:03d})/" for i in range(150)]
-    for kind in ("bloom", "cuckoo"):
-        root = tempfile.mkdtemp(prefix=f"seen_dup_{kind}_")
-        try:
-            seen = SeenSet(
-                spark, root, n_shards=2, bits_per_shard=1 << 13,
-                filter_kind=kind,
-            )
-            df = spark.createDataFrame([(s,) for s in surts], "surt string")
-            seen.add(df, round_no=0)
-            load1 = [
-                st.get("load_factor", st.get("fill"))
-                for st in seen.sidecar_stats()
-            ]
-            seen.add(df, round_no=1)  # the "retry": identical delta
-            seen._bitmaps = None
-            probe = spark.createDataFrame(
-                [(s,) for s in surts] + [("com,fresh)/x",)], "surt string"
-            )
-            out = {r.surt for r in seen.filter_unseen(probe).collect()}
-            assert out == {"com,fresh)/x"}  # zero false negatives
-            load2 = [
-                st.get("load_factor", st.get("fill"))
-                for st in seen.sidecar_stats()
-            ]
-            if kind == "bloom":  # re-OR: bit-fill unchanged
-                assert load2 == load1
-            else:  # duplicate fingerprints: inflation is OBSERVABLE
-                assert all(b > a for a, b in zip(load1, load2))
-                assert not any(st["saturated"] for st in seen.sidecar_stats())
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
+    root = tempfile.mkdtemp(prefix="seen_dup_")
+    try:
+        seen = SeenSet(spark, root, n_shards=2, bits_per_shard=1 << 13)
+        df = spark.createDataFrame([(s,) for s in surts], "surt string")
+        seen.add(df, round_no=0)
+        fill1 = [st["fill"] for st in seen.sidecar_stats()]
+        seen.add(df, round_no=1)  # the "retry": identical delta
+        seen._bitmaps = None
+        probe = spark.createDataFrame(
+            [(s,) for s in surts] + [("com,fresh)/x",)], "surt string"
+        )
+        out = {r.surt for r in seen.filter_unseen(probe).collect()}
+        assert out == {"com,fresh)/x"}  # zero false negatives
+        assert [st["fill"] for st in seen.sidecar_stats()] == fill1
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_filter_unseen_null_surt_passes_through(spark):
@@ -579,17 +420,12 @@ def test_filter_unseen_null_surt_passes_through(spark):
 
 
 def test_rollback_incompatible_sidecars_degrades_to_full_rebuild(spark):
-    """rollback over cuckoo sidecars written under a DIFFERENT
-    geometry must not run the incremental delete against them (wrong
-    fingerprint derivation could remove surviving keys): it falls
-    back to the full rebuild, regenerating sidecars under the current
-    spec with zero false negatives."""
+    """rollback over sidecars written under a DIFFERENT geometry
+    rebuilds them under the current spec (it never probes or merges
+    the old bitmaps), with zero false negatives afterwards."""
     root = tempfile.mkdtemp(prefix="seen_fmtroll_")
     try:
-        writer = SeenSet(
-            spark, root, n_shards=2, bits_per_shard=1 << 12,
-            filter_kind="cuckoo",
-        )
+        writer = SeenSet(spark, root, n_shards=2, bits_per_shard=1 << 12)
         surts = [f"com,roll{i:03d})/" for i in range(120)]
         writer.add(
             spark.createDataFrame([(s,) for s in surts], "surt string"),
@@ -600,10 +436,7 @@ def test_rollback_incompatible_sidecars_degrades_to_full_rebuild(spark):
             round_no=1,
         )
         # a resume under different geometry rolls back round 1
-        other = SeenSet(
-            spark, root, n_shards=2, bits_per_shard=1 << 13,
-            filter_kind="cuckoo",
-        )
+        other = SeenSet(spark, root, n_shards=2, bits_per_shard=1 << 13)
         other.rollback(last_good_round=0)
         probe = spark.createDataFrame(
             [(s,) for s in surts]
@@ -619,140 +452,19 @@ def test_rollback_incompatible_sidecars_degrades_to_full_rebuild(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def _replay_sidecar_inserts(spark, seen, surts, times=1):
-    """Simulate task-retry/speculation double-inserts HONESTLY:
-    re-run the sidecar fingerprint inserts without touching the
-    exact table (parquet commits exactly one task attempt, so real
-    retries inflate only the sidecars)."""
-    import numpy as np
-
-    from common_crawl___autumn_2025_spark.crawl.cuckoo import (
-        _FP_HASH,
-        CuckooShard,
-    )
-    from common_crawl___autumn_2025_spark.crawl.hashing import (
-        cuckoo_parts_vec,
-        h1_from_int64,
-    )
-    from common_crawl___autumn_2025_spark.crawl.seen import h1_expr
-
-    rows = (
-        spark.createDataFrame([(s,) for s in surts], "surt string")
-        .select(
-            shard_expr("surt", seen.n_shards).alias("shard"),
-            h1_expr("surt").alias("h1"),
-        )
-        .collect()
-    )
-    by_shard: dict[int, list[int]] = {}
-    for r in rows:
-        by_shard.setdefault(r.shard, []).append(r.h1)
-    for shard, h1s in by_shard.items():
-        f = seen._bloom_file(shard)
-        cf = CuckooShard.from_array(np.load(f))
-        h1 = h1_from_int64(np.array(h1s, dtype=np.int64))
-        fp, i1, i2 = cuckoo_parts_vec(h1, seen.cuckoo_buckets, _FP_HASH)
-        for _ in range(times):
-            for j in range(len(fp)):
-                cf.insert_parts(int(fp[j]), int(i1[j]), int(i2[j]))
-        np.save(open(f, "wb"), cf.to_array())
-    seen._bitmaps = None
-
-
-def test_cuckoo_compact_sheds_duplicate_inflation(spark):
-    """compact() rebuilds over-loaded cuckoo shards from the exact
-    table, shedding retry-duplicate fingerprint copies (which exist
-    ONLY in the sidecars): load returns to the true-key level and
-    membership stays exact."""
-    surts = [f"com,cmp{i:03d})/" for i in range(150)]
-    root = tempfile.mkdtemp(prefix="seen_cmp_")
-    try:
-        seen = SeenSet(
-            spark, root, n_shards=2, bits_per_shard=1 << 13,
-            filter_kind="cuckoo",
-        )
-        df = spark.createDataFrame([(s,) for s in surts], "surt string")
-        seen.add(df, round_no=0)
-        load1 = sorted(st["load_factor"] for st in seen.sidecar_stats())
-        _replay_sidecar_inserts(spark, seen, surts)  # the "retry"
-        assert sorted(
-            st["load_factor"] for st in seen.sidecar_stats()
-        ) > load1
-
-        # below-threshold call is a no-op; an inflated shard exceeds
-        # the duplicate-free load so threshold=load1 targets both
-        assert seen.compact(load_threshold=0.99) == []
-        compacted = seen.compact(load_threshold=max(load1))
-        assert compacted == [0, 1]
-        # load is back to the true-key level (same key count per
-        # shard, occupancy independent of insert order)
-        assert sorted(
-            st["load_factor"] for st in seen.sidecar_stats()
-        ) == load1
-        probe = spark.createDataFrame(
-            [(s,) for s in surts] + [("com,freshc)/x",)], "surt string"
-        )
-        out = {r.surt for r in seen.filter_unseen(probe).collect()}
-        assert out == {"com,freshc)/x"}  # zero false negatives
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def test_cuckoo_compact_clears_duplicate_saturation(spark):
-    """A shard pushed into saturation purely by duplicate sidecar
-    inserts (true keys fit comfortably) is un-saturated by compact()
-    and probes exactly afterward."""
-    surts = [f"com,sat{i:03d})/" for i in range(40)]
-    root = tempfile.mkdtemp(prefix="seen_csat_")
-    try:
-        # 2 shards x 8 buckets x 4 slots = 32 slots/shard; ~20 true
-        # keys/shard fit, but 5x retry duplicates force saturation
-        seen = SeenSet(
-            spark, root, n_shards=2, bits_per_shard=256,
-            filter_kind="cuckoo",
-        )
-        df = spark.createDataFrame([(s,) for s in surts], "surt string")
-        seen.add(df, round_no=0)
-        _replay_sidecar_inserts(spark, seen, surts, times=5)
-        assert any(st["saturated"] for st in seen.sidecar_stats())
-
-        compacted = seen.compact()
-        assert compacted  # saturated shards targeted regardless of load
-        stats = seen.sidecar_stats()
-        assert not any(st["saturated"] for st in stats)
-        assert all(st["load_factor"] <= 0.75 for st in stats)
-        seen._bitmaps = None
-        probe = spark.createDataFrame(
-            [(s,) for s in surts] + [("com,freshs)/y",)], "surt string"
-        )
-        out = {r.surt for r in seen.filter_unseen(probe).collect()}
-        assert out == {"com,freshs)/y"}
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def test_rebuild_keeps_one_copy_per_exact_row(spark):
-    """The copy-count invariant behind the incremental delete: a
-    rebuild inserts one sidecar copy PER EXACT ROW, so when the same
-    surt legitimately exists in two rounds' partitions, rolling back
-    one round leaves the surviving row's copy — never a false
-    negative (the review-found np.unique regression)."""
+    """The same surt legitimately in two rounds' exact partitions
+    (standalone SeenSet use has no seen-gate) stays seen after the
+    later round is rolled back: the rebuild covers every surviving
+    exact row."""
     root = tempfile.mkdtemp(prefix="seen_copies_")
     try:
-        seen = SeenSet(
-            spark, root, n_shards=2, bits_per_shard=1 << 12,
-            filter_kind="cuckoo",
-        )
+        seen = SeenSet(spark, root, n_shards=2, bits_per_shard=1 << 12)
         df = spark.createDataFrame(
             [(f"com,dup{i:02d})/",) for i in range(30)], "surt string"
         )
-        # same surts land in BOTH rounds' exact partitions (standalone
-        # SeenSet use has no seen-gate)
         seen.add(df, round_no=0)
         seen.add(df, round_no=1)
-        # force the per-row rebuild path, then roll back round 1:
-        # the incremental delete removes round 1's copies only
-        seen.compact(load_threshold=0.0)
         seen.rollback(0)
         probe = spark.createDataFrame(
             [(f"com,dup{i:02d})/",) for i in range(30)]
@@ -763,54 +475,3 @@ def test_rebuild_keeps_one_copy_per_exact_row(spark):
         assert out == {"com,fresh)/z"}  # round-0 rows still seen
     finally:
         shutil.rmtree(root, ignore_errors=True)
-
-
-def test_compact_noop_on_bloom(spark):
-    root = tempfile.mkdtemp(prefix="seen_cbl_")
-    try:
-        seen = SeenSet(spark, root, n_shards=2, bits_per_shard=1 << 12)
-        seen.add(
-            spark.createDataFrame([("a)/",), ("b)/",)], "surt string"), 0
-        )
-        assert seen.compact(load_threshold=0.0) == []
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def test_engine_auto_compaction_preserves_crawl(spark, small_spec):
-    """The engine's commit-boundary auto-compaction (threshold forced
-    to ~0 so every round compacts) changes NOTHING about the crawl:
-    fetch log and seen set equal the no-compaction run, and the round
-    metrics expose load/saturation/compaction counts."""
-    import dataclasses
-
-    spec = dataclasses.replace(small_spec, seen_filter="cuckoo")
-    seeds = syn.seed_urls(spec.web, 10)
-
-    def run(threshold):
-        root = tempfile.mkdtemp(prefix="ck_autocmp_")
-        try:
-            eng = CrawlEngine(
-                spark, spec, root, partitions=4,
-                cuckoo_compact_threshold=threshold,
-            )
-            summary = eng.run(seeds)
-            log = sorted(
-                (r.round, r.host, r.seq, r.surt, r.status)
-                for rr in range(eng.store.latest_round() + 1)
-                for r in eng.store.read_table(rr, "fetch_log").collect()
-            )
-            seen = {r.surt for r in eng.seen.exact_df().collect()}
-            return summary, log, seen
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
-
-    s_off, log_off, seen_off = run(None)
-    s_on, log_on, seen_on = run(1e-9)
-    assert log_on == log_off
-    assert seen_on == seen_off
-    for entry in s_on["rounds"]:
-        assert 0.0 < entry["seen_max_load"] < 1.0
-        assert entry["seen_saturated_shards"] == 0
-        assert entry["seen_compacted_shards"] >= 1
-    assert all("seen_compacted_shards" not in e for e in s_off["rounds"])

@@ -41,13 +41,6 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--seen-shards", type=int, default=16)
     ap.add_argument("--seen-bits", type=int, default=1 << 20)
-    ap.add_argument(
-        "--seen-filter",
-        choices=("bloom", "cuckoo"),
-        default="bloom",
-        help="URL-seen prefilter kind (cuckoo = deletion-capable, "
-        "incremental rollback)",
-    )
     ap.add_argument("--resume", action="store_true")
     ap.add_argument(
         "--expire-keep",
@@ -68,10 +61,9 @@ def main() -> None:
     ap.add_argument(
         "--seen-stats",
         action="store_true",
-        help="append per-shard seen-sidecar health to the summary "
-        "(cuckoo load factor / saturation, bloom bit-fill) — the "
-        "compact-before-saturation visibility lever; O(sidecar "
-        "bytes) driver reads, run at checkpoint boundaries",
+        help="append per-shard seen-sidecar Bloom bit-fill to the "
+        "summary; O(sidecar bytes) driver reads, run at checkpoint "
+        "boundaries",
     )
     args = ap.parse_args()
 
@@ -89,7 +81,6 @@ def main() -> None:
         max_rounds=args.rounds,
         seen_shards=args.seen_shards,
         seen_bits_per_shard=args.seen_bits,
-        seen_filter=args.seen_filter,
     )
     seeds = syn.seed_urls(spec.web, args.seeds)
     t0 = time.time()
