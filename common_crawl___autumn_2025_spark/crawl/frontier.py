@@ -49,6 +49,7 @@ from ..canonical import canonicalize, host_of, registered_domain, surt
 from .checkpoints import CheckpointStore
 from .fetchers import SyntheticFetcher
 from .politeness import with_host_sequence
+from .robots import robots_decision, with_robots_flags
 from .seen import SeenSet
 
 ROBOTS_FLAGS_SCHEMA = "__robots_ok boolean, __delay double"
@@ -288,10 +289,10 @@ class CrawlEngine:
     id set (``isin``) below ``matched_isin_limit``, a broadcast
     anti-join above it, and a left_anti join against the checkpointed
     ``matches`` table once the set passes ``matched_mirror_limit`` (no
-    driver state at the 10^7+-matches design point). Robots rules live
-    in a plain Spark broadcast dict below ``robots_dict_limit`` rows
-    (no per-round broadcast-join build); a larger robots table keeps
-    the declarative join path.
+    driver state at the 10^7+-matches design point). Robots rules
+    have one path per source: the web config's rules are computed
+    inside the Bloom-probe Arrow pass, and a caller's robots table is
+    always broadcast-joined (``robots.with_robots_flags``).
     """
 
     # matched-seed filters switch from driver isin to a broadcast
@@ -308,11 +309,6 @@ class CrawlEngine:
     # state. Standalone ``run_round`` callers (engine state not
     # seeded by ``run()``) always take the table path.
     matched_mirror_limit = 1_000_000
-    # robots config switches from broadcast dict to per-round join
-    # (a 1M-row dict was ~hundreds of MB collected to the driver and
-    # re-broadcast; the join path costs one extra broadcast join per
-    # round and no driver materialization)
-    robots_dict_limit = 50_000
     # politeness switches from plain host window to the range-salted
     # construction (politeness.with_host_sequence) above this row count
     salted_politeness_threshold = 200_000
@@ -354,27 +350,10 @@ class CrawlEngine:
         # has seeded it (fresh run or small-table resume); otherwise
         # _filter_unmatched anti-joins against the matches table itself
         self._mirror_valid = False
-        self.robots_dict: dict | None = None
-        self.robots_webcfg = None
-        self.robots = None
-        if robots is None:
-            # default robots derive from the web config's pure
-            # function — compute them LAZILY inside the executor flags
-            # pass (per-worker host cache) instead of materializing
-            # every host's rules on the driver (at 10^5+ hosts the
-            # driver loop is a multi-second fixed cost per run; at the
-            # design point it is minutes)
-            self.robots_webcfg = spec.web
-        else:
-            probe = robots.limit(self.robots_dict_limit + 1).collect()
-            if len(probe) <= self.robots_dict_limit:
-                self.robots_dict = {
-                    r["host"]: (tuple(r["disallow"]), float(r["crawl_delay"]))
-                    for r in probe
-                }
-                self._robots_bc = spark.sparkContext.broadcast(self.robots_dict)
-            else:  # huge robots config: keep the broadcast-join path
-                self.robots = robots
+        # None = the web config's rules, computed LAZILY inside the
+        # executor flags pass (per-worker host cache) instead of
+        # materialized on the driver; a caller's table is joined
+        self.robots = robots
 
     def _parts(self, n_rows: int, rows_per_task: int) -> int:
         return max(1, min(self.partitions, -(-max(n_rows, 1) // rows_per_task)))
@@ -452,31 +431,24 @@ class CrawlEngine:
 
     def _robots_flags_factory(self):
         """Zero-arg factory -> (pdf -> DataFrame[__robots_ok, __delay])
-        for the dict/webcfg robots modes. Captures only the broadcast
-        handle / web config (picklable — never ``self``). The factory
-        runs once per task so the webcfg per-host rule cache persists
-        across that task's Arrow batches. This is what rides the
-        seen-set Bloom probe's Arrow pass (``SeenSet.filter_unseen
-        (row_flags=...)``) — ONE Python worker stage per task instead
-        of a chained robots pass feeding the fetch pass."""
-        bc = self._robots_bc if self.robots_dict is not None else None
-        webcfg = self.robots_webcfg
+        for the default (web-config) robots. Captures only the web
+        config (picklable — never ``self``). The factory runs once per
+        task so the per-host rule cache persists across that task's
+        Arrow batches. This is what rides the seen-set Bloom probe's
+        Arrow pass (``SeenSet.filter_unseen(row_flags=...)``) — ONE
+        Python worker stage per task instead of a chained robots pass
+        feeding the fetch pass."""
+        webcfg = self.spec.web
 
         def factory():
-            if bc is not None:
-                robots = bc.value
-                lookup = lambda h: robots.get(h, ((), 1.0))  # noqa: E731
-            else:
-                cache: dict = {}
+            cache: dict = {}
 
-                def lookup(h):
-                    if h not in cache:
-                        cache[h] = syn.robots_for_host(webcfg, h)
-                    return cache[h]
+            def lookup(h):
+                if h not in cache:
+                    cache[h] = syn.robots_for_host(webcfg, h)
+                return cache[h]
 
             def flags(pdf):
-                from .robots import robots_decision
-
                 ok, delay = [], []
                 for url, host in zip(pdf["url"], pdf["host"]):
                     disallow, d = lookup(host)
@@ -504,49 +476,28 @@ class CrawlEngine:
 
     def _robots_flags(self, df: DataFrame) -> DataFrame:
         """Attach ``__robots_ok`` + ``__delay`` columns as a STANDALONE
-        pass (used for retry rows and by the join mode; the main-path
-        flags are fused into the Bloom probe via
-        ``_robots_flags_factory``).
-
-        Dict mode: one Arrow pass against the broadcast robots config
-        (same path logic as the oracle, ``oracle.py`` step 5). Join
-        mode (robots table too big to broadcast as a dict): the
-        declarative join+exists filter from ``politeness.schedule``.
+        pass: the caller's robots table always takes the broadcast
+        join (``robots.with_robots_flags``); with the default robots
+        this is the web-config Arrow pass retry rows take (fresh rows
+        get the same flags fused into the Bloom probe via
+        ``_robots_flags_factory``; path logic as the oracle,
+        ``oracle.py`` step 5).
         """
+        if self.robots is not None:
+            return with_robots_flags(df, self.robots)
         schema_fields = ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
         )
-        if self.robots_dict is not None or self.robots_webcfg is not None:
-            factory = self._robots_flags_factory()
+        factory = self._robots_flags_factory()
 
-            def flags(batches):
-                flag_fn = factory()
-                for pdf in batches:
-                    extra = flag_fn(pdf)
-                    yield pdf.assign(
-                        **{c: extra[c] for c in extra.columns}
-                    )
+        def flags(batches):
+            flag_fn = factory()
+            for pdf in batches:
+                extra = flag_fn(pdf)
+                yield pdf.assign(**{c: extra[c] for c in extra.columns})
 
-            return df.mapInPandas(
-                flags, schema=schema_fields + ", " + ROBOTS_FLAGS_SCHEMA
-            )
-        from .robots import robots_allowed_expr
-
-        joined = df.join(F.broadcast(self.robots), on=["host"], how="left")
-        path = F.regexp_replace(
-            F.regexp_extract(F.col("url"), r"^[a-z]+://[^/]+(/.*)?$", 1),
-            r"\?.*$",
-            "",
-        )
-        ok = robots_allowed_expr(
-            F.col("disallow"), F.coalesce(path, F.lit("/"))
-        )
-        return (
-            joined.withColumn("__robots_ok", ok)
-            .withColumn(
-                "__delay", F.coalesce(F.col("crawl_delay"), F.lit(1.0))
-            )
-            .drop("disallow", "crawl_delay")
+        return df.mapInPandas(
+            flags, schema=schema_fields + ", " + ROBOTS_FLAGS_SCHEMA
         )
 
     # -- one round -------------------------------------------------------
@@ -602,7 +553,7 @@ class CrawlEngine:
         )
 
         # 2. seen-set anti join (Bloom prefilter + exact confirm).
-        # In the dict/webcfg robots modes the per-row robots flags are
+        # With the default (web-config) robots the per-row flags are
         # FUSED into the same Arrow pass as the Bloom probe — one
         # Python worker stage per task for the whole dedup job, and
         # the later schedule+fetch job runs fetch as its only Python
@@ -657,9 +608,10 @@ class CrawlEngine:
 
         # 5. politeness scheduling + 6. fetch — ONE job, with fetch as
         # its ONLY Python stage (robots flags were fused into the
-        # Bloom-probe pass above; the join mode attaches them here
-        # declaratively, still JVM-only). Small rounds rank with a
-        # plain per-host window on an explicit host repartition (no
+        # Bloom-probe pass above; a caller's robots table attaches
+        # them here by the broadcast join, still JVM-only). Small
+        # rounds rank with a plain per-host window on an explicit host
+        # repartition (no
         # sampling job, no offsets broadcast), while rounds above
         # salted_politeness_threshold use the range-salted
         # construction that bounds any single host's rows per task

@@ -41,18 +41,20 @@ class OracleResult:
 def crawl(
     spec: CrawlSpec, seeds: list[str], robots: dict | None = None
 ) -> OracleResult:
-    """``robots``: optional ``{host: (rules, crawl_delay)}`` override
-    (the engine's dict-mode shape; rules may carry ``!``-encoded
-    Allow entries) — defaults to the synthetic web's per-host rules.
-    Missing hosts fall back to ((), 1.0), matching the engine."""
+    """``robots``: optional ``{host: (rules, crawl_delay)}`` override,
+    the rows of a robots table (rules may carry ``!``-encoded Allow
+    entries) — defaults to the synthetic web's per-host rules. A
+    missing host, ``None`` rules and a ``None`` delay read as
+    allow-all at 1.0 s, the robots table's NULL contract and the
+    engine's join."""
     from .robots import robots_decision
 
     res = OracleResult()
     if robots is not None:
-        robots_table = robots
 
         def robots_for(host: str):
-            return robots_table.get(host, ((), 1.0))
+            rules, delay = robots.get(host, (None, None))
+            return rules or (), 1.0 if delay is None else delay
 
     else:
         cache: dict = {}

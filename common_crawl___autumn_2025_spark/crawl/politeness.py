@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .robots import with_robots_flags
+
 
 def with_host_sequence(
     frontier: DataFrame,
@@ -131,28 +133,22 @@ def schedule(
     """Politeness-schedule a frontier against a robots config table.
 
     ``robots``: ``(host STRING, disallow ARRAY<STRING>, crawl_delay
-    DOUBLE)`` — small config, broadcast. Rules resolve via RFC 9309
-    longest-match (``robots.robots_allowed_expr``): plain entries are
-    Disallow prefixes, ``!``-prefixed entries are Allow (written by
+    DOUBLE)`` — small config, broadcast by ``robots.with_robots_flags``.
+    Rules resolve via RFC 9309 longest-match
+    (``robots.robots_allowed_expr``): plain entries are Disallow
+    prefixes, ``!``-prefixed entries are Allow (written by
     ``parse_robots(allow_directives=True)``); for allow-free arrays
     this is the plain prefix-exclusion check. Surviving rows get
     ``seq``, ``fetch_ts_offset``, ``batch_id``.
     """
-    from .robots import robots_allowed_expr
-
-    joined = frontier.join(F.broadcast(robots), on=["host"], how="left")
-    path = F.regexp_replace(
-        F.regexp_extract(F.col("url"), r"^[a-z]+://[^/]+(/.*)?$", 1), r"\?.*$", ""
+    flagged = with_robots_flags(frontier, robots, default_delay_s)
+    seq = with_host_sequence(
+        flagged.where(F.col("__robots_ok")), partitions=partitions, cleanup=cleanup
     )
-    allowed = joined.where(
-        robots_allowed_expr(F.col("disallow"), F.coalesce(path, F.lit("/")))
-    )
-    seq = with_host_sequence(allowed, partitions=partitions, cleanup=cleanup)
-    delay = F.coalesce(F.col("crawl_delay"), F.lit(default_delay_s))
     return (
-        seq.withColumn("fetch_ts_offset", (F.col("seq") - 1) * delay)
+        seq.withColumn("fetch_ts_offset", (F.col("seq") - 1) * F.col("__delay"))
         .withColumn(
             "batch_id", F.floor(F.col("fetch_ts_offset") / F.lit(round_budget_s)).cast("int")
         )
-        .drop("disallow", "crawl_delay")
+        .drop("__robots_ok", "__delay")
     )

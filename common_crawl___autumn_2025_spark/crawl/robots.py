@@ -31,7 +31,7 @@ semantics: Allow rules are encoded into the same ``disallow`` array
 with a ``!`` prefix (path patterns always start with ``/``, so the
 marker is unambiguous and the table schema is unchanged), and every
 consumer — ``robots_decision`` (Python probe path),
-``robots_allowed_expr`` (declarative join path) — resolves a path
+``robots_allowed_expr`` (``with_robots_flags`` join) — resolves a path
 against the LONGEST matching rule, Allow winning ties (RFC 9309
 §2.2.2 "least restrictive"). Wildcards (``*``/``$``) are not
 implemented; patterns are literal prefixes, as before.
@@ -75,8 +75,8 @@ def robots_decision(rules, path: str) -> bool:
 
 def robots_allowed_expr(rules_col, path_col):
     """``robots_decision`` as a pure Catalyst expression over an
-    encoded rules ARRAY column — the declarative twin used by the
-    politeness join path (no Python worker). NULL rules = allow."""
+    encoded rules ARRAY column — the declarative twin used by
+    ``with_robots_flags`` (no Python worker). NULL rules = allow."""
     dis = F.filter(
         rules_col,
         lambda d: (~F.startswith(d, F.lit("!")))
@@ -93,6 +93,33 @@ def robots_allowed_expr(rules_col, path_col):
         rules_col.isNull()
         | best_dis.isNull()
         | (best_alw.isNotNull() & (best_alw >= best_dis))
+    )
+
+
+def with_robots_flags(
+    df: DataFrame, robots: DataFrame, default_delay_s: float = 1.0
+) -> DataFrame:
+    """Attach ``__robots_ok`` + ``__delay`` to a frontier-shaped ``df``
+    (``host``, ``url``) by a broadcast left join against a robots
+    table (``ROBOTS_SCHEMA``) — the one declarative robots path, JVM
+    only. A host absent from the table, NULL rules and a NULL delay
+    all read as allow-all at ``default_delay_s``, the contract
+    ``build_robots_table`` writes for a failed fetch."""
+    path = F.regexp_replace(
+        F.regexp_extract(F.col("url"), r"^[a-z]+://[^/]+(/.*)?$", 1),
+        r"\?.*$",
+        "",
+    )
+    return (
+        df.join(F.broadcast(robots), on=["host"], how="left")
+        .withColumn(
+            "__robots_ok",
+            robots_allowed_expr(F.col("disallow"), F.coalesce(path, F.lit("/"))),
+        )
+        .withColumn(
+            "__delay", F.coalesce(F.col("crawl_delay"), F.lit(default_delay_s))
+        )
+        .drop("disallow", "crawl_delay")
     )
 
 

@@ -728,7 +728,10 @@ def _pq_books(centroids: np.ndarray) -> np.ndarray:
     subspace, so the SQL oracle derives all M codebooks from one
     ``cent`` CTE."""
     k, dim = centroids.shape
-    assert dim == PQ_M * PQ_SUB, (dim, PQ_M, PQ_SUB)
+    if dim != PQ_M * PQ_SUB:
+        raise ValueError(
+            f"codebook dim {dim} != PQ_M * PQ_SUB = {PQ_M} * {PQ_SUB}"
+        )
     return centroids.reshape(k, PQ_M, PQ_SUB).transpose(1, 0, 2).copy()
 
 

@@ -290,8 +290,9 @@ def test_retry_backoff_salted_path_identical(spark):
 
 
 def test_explicit_robots_dataframe_identical(spark, spec, seeds, oracle_result):
-    """Passing robots as a DataFrame (the dict-broadcast path) must
-    produce the same trace as the default lazy per-worker computation."""
+    """Passing robots as a DataFrame (always the broadcast-join path)
+    must produce the same trace as the default lazy per-worker
+    computation."""
     robots_df = spark.createDataFrame(
         syn.robots_pandas(spec.web),
         "host string, disallow array<string>, crawl_delay double",
@@ -305,21 +306,33 @@ def test_explicit_robots_dataframe_identical(spark, spec, seeds, oracle_result):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_robots_join_path_identical(spark, spec, seeds, oracle_result, monkeypatch):
-    """A robots table larger than robots_dict_limit must keep the
-    declarative broadcast-join path (no driver dict) and still replay
-    the oracle exactly."""
-    monkeypatch.setattr(CrawlEngine, "robots_dict_limit", 5)
-    robots_df = spark.createDataFrame(
-        syn.robots_pandas(spec.web),  # 20 hosts > limit of 5
-        "host string, disallow array<string>, crawl_delay double",
+def test_robots_table_null_rules_replay_identical(
+    spark, spec, seeds, oracle_result
+):
+    """A robots table with a NULL crawl delay (host 0) and NULL rules
+    (host 1) — what ``build_robots_table`` writes for a robots.txt
+    without Crawl-delay and for a failed fetch — reads as allow-all at
+    the 1.0 s default delay, and the engine replays the oracle given
+    the same rows. The NULLs must actually change the crawl."""
+    pdf = syn.robots_pandas(spec.web)
+    rows = [
+        (r.host, list(r.disallow), float(r.crawl_delay))
+        for r in pdf.itertuples()
+    ]
+    rows[0] = (rows[0][0], rows[0][1], None)
+    rows[1] = (rows[1][0], None, rows[1][2])
+    want = oracle.crawl(
+        spec, seeds, robots={h: (dis, delay) for h, dis, delay in rows}
     )
-    root = tempfile.mkdtemp(prefix="crawl_robotsjoin_")
+    assert sorted(want.fetch_log) != sorted(oracle_result.fetch_log)
+    robots_df = spark.createDataFrame(
+        rows, "host string, disallow array<string>, crawl_delay double"
+    )
+    root = tempfile.mkdtemp(prefix="crawl_robotsnull_")
     try:
         eng = CrawlEngine(spark, spec, root, robots=robots_df, partitions=4)
-        assert eng.robots is not None and eng.robots_dict is None
         eng.run(seeds)
-        assert _engine_fetch_log(eng) == sorted(oracle_result.fetch_log)
+        assert _engine_fetch_log(eng) == sorted(want.fetch_log)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

@@ -275,10 +275,10 @@ def test_robots_allowed_expr_matches_python_decision(spark):
 
 
 def test_allow_directive_replay_equality(spark):
-    """Engine with an Allow-bearing robots table reproduces the
-    oracle given the same rules — in BOTH robots modes (broadcast
-    dict and declarative join) — and actually fetches the allowed-
-    within-disallowed page the ignore-Allow posture would skip."""
+    """Engine with an Allow-bearing robots table (the broadcast-join
+    path) reproduces the oracle given the same rules, and actually
+    fetches the allowed-within-disallowed page the ignore-Allow
+    posture would skip."""
     import shutil
     import tempfile
 
@@ -313,30 +313,20 @@ def test_allow_directive_replay_equality(spark):
         "host string, disallow array<string>, crawl_delay double",
     )
 
-    def engine_log(dict_limit=None):
-        root = tempfile.mkdtemp(prefix="crawl_allow_")
-        old = CrawlEngine.robots_dict_limit
-        try:
-            if dict_limit is not None:  # force the join mode
-                CrawlEngine.robots_dict_limit = dict_limit
-            eng = CrawlEngine(
-                spark, spec, root, robots=robots_df, partitions=4
-            )
-            assert (eng.robots is None) == (dict_limit is None)
-            eng.run(seeds)
-            return sorted(
-                (row.round, row.host, row.seq, row.surt, row.url, row.depth,
-                 row.seed_id, row.status, row.fetch_ts_offset,
-                 row.target_number)
-                for r in range(eng.store.latest_round() + 1)
-                for row in eng.store.read_table(r, "fetch_log").collect()
-            )
-        finally:
-            CrawlEngine.robots_dict_limit = old
-            shutil.rmtree(root, ignore_errors=True)
-
-    assert engine_log() == sorted(want.fetch_log)  # dict mode
-    assert engine_log(dict_limit=0) == sorted(want.fetch_log)  # join mode
+    root = tempfile.mkdtemp(prefix="crawl_allow_")
+    try:
+        eng = CrawlEngine(spark, spec, root, robots=robots_df, partitions=4)
+        eng.run(seeds)
+        got = sorted(
+            (row.round, row.host, row.seq, row.surt, row.url, row.depth,
+             row.seed_id, row.status, row.fetch_ts_offset,
+             row.target_number)
+            for r in range(eng.store.latest_round() + 1)
+            for row in eng.store.read_table(r, "fetch_log").collect()
+        )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    assert got == sorted(want.fetch_log)
 
 
 def test_parse_robots_never_crashes_on_arbitrary_text():

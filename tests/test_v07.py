@@ -7,8 +7,10 @@ import os
 
 import duckdb
 import numpy as np
+import pytest
 
 from common_crawl___autumn_2025_spark.operators.similarity import (
+    _pq_books,
     _v07_oracle_sql,
     v01_cosine_topk_bruteforce,
     v07_ann_ivf_pq,
@@ -85,3 +87,10 @@ def test_v07_parallelism_invariance(spark, sf_dir):
         assert _rows(v07_ann_ivf_pq(spark, sf_dir)) == base
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_pq_books_rejects_wrong_dim():
+    """The codebook-shape precondition is a ValueError, so it still
+    holds under ``python -O`` (which strips ``assert``)."""
+    with pytest.raises(ValueError):
+        _pq_books(np.zeros((16, 63)))
