@@ -11,7 +11,11 @@ configuration:
 - fixed ``spark.sql.shuffle.partitions`` for deterministic plans at
   test scale (AQE coalesces down when partitions are small),
 - UTC session timezone so timestamp semantics match the DuckDB
-  oracle.
+  oracle,
+- local sessions fork Python workers from ``worker_daemon``, which
+  spares each task a re-read of ``pyspark.zip`` (~250 ms of CPU on
+  CPython 3.11/3.12); a ``--py-files`` package joins ``sys.path`` only
+  after the daemon starts, so cluster sessions keep pyspark's daemon.
 """
 
 from __future__ import annotations
@@ -66,7 +70,9 @@ def get_spark(
     # Only force a master when none is configured (spark-submit on a
     # cluster supplies its own).
     if not os.environ.get("SPARK_GRAFT_NO_LOCAL_MASTER"):
-        builder = builder.master(f"local[{cores}]")
+        builder = builder.master(f"local[{cores}]").config(
+            "spark.python.daemon.module", f"{__package__}.worker_daemon"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -95,25 +101,19 @@ def _warm_session(spark, cores: int) -> None:
     """One bounded SYNTHETIC warm-up pass per session (r7).
 
     Short queries measured on a fresh JVM pay first-invocation costs
-    that have nothing to do with their plans: spawning the Python
-    worker pool (one worker per core, each importing numpy/pandas),
-    opening Arrow channels, and tiering the shuffle/window/join/
-    codegen machinery from interpreter to C2. A benchmark that runs
-    each query only a couple of times lands mid-warm-up-curve —
-    round 6's bench was accidentally "protected" from this because
-    its slowest query ran ~2 minutes of JVM-heavy work that warmed
-    everything after it; making that query fast exposed the cold
-    start everywhere else (measured: d03 runs 10.9/6.3/4.0/2.4 s on
-    consecutive invocations in a fresh session).
+    that have nothing to do with their plans: starting the Python
+    worker daemon and forking its pool (one worker per core, each
+    importing pandas/pyarrow/numpy on its first Arrow task), opening
+    Arrow channels, and tiering the shuffle/window/join/codegen
+    machinery from interpreter to C2 (measured: d03 runs 10.9/6.3/
+    4.0/2.4 s on consecutive invocations in a fresh session).
 
     This pass touches NO input data and caches NOTHING an actual
     query reads — it drives a deterministic in-memory range through
     the hot machinery (mapInPandas+Arrow on every core, broadcast and
     shuffle joins, a ranking window, partial aggregation, string
     expressions, a sort) and discards the result via the noop sink.
-    It is the session-level extension of the bench's own untimed
-    warmup query, sized to a few seconds; disable with
-    SPARK_GRAFT_WARM_SESSION=0."""
+    Disable with SPARK_GRAFT_WARM_SESSION=0."""
     sc = spark.sparkContext
     key = id(sc)
     if key in _WARMED:
