@@ -12,10 +12,18 @@ equivalent is:
   ``shard_expr``);
 - a per-shard PACKED Bloom-bitmap sidecar, built and merged entirely
   by executor tasks (each shard's rows land in one task, which
-  read-modify-writes its own ``shard=N.npy`` under tmp+rename), used
-  as a cheap *prefilter* for the anti-join. The
-  driver never holds bitmap bytes — at the 4096-shard design point
-  that path would move GBs per round through ``collect()``.
+  publishes its own ``shard=N.npy`` under tmp+rename), used as a
+  cheap *prefilter* for the anti-join. The driver never holds bitmap
+  bytes — at the 4096-shard design point that path would move GBs
+  per round through ``collect()``.
+
+The Bloom logic exists once, as three module-level kernels that the
+executor closures call (they never capture ``self``):
+``bloom_bitmap`` builds a packed bitmap, ``bloom_probe`` tests one
+vectorized, and ``publish_sidecar`` writes a shard file. ``add``
+(incremental OR-merge) and ``_rebuild_sidecars`` (rollback) share
+the builder and publisher; every probe mode of ``filter_unseen``
+runs one Arrow pass around ``bloom_probe``.
 
 Every sidecar position derives from ONE JVM-projected long per key —
 ``xxhash64(surt)`` (``h1_expr``; bit-exact Python mirror in
@@ -42,7 +50,7 @@ independently and incrementally — each round ORs only its delta.
 
 from __future__ import annotations
 
-import hashlib
+import functools
 import os
 
 import numpy as np
@@ -53,13 +61,6 @@ from pyspark.sql import functions as F
 from .hashing import bloom_positions_vec, h1_from_int64, xxh64_str
 
 SEEN_SCHEMA = "shard int, surt string, first_round int"
-
-
-def hash64(s: str) -> int:
-    """Stable unsigned 64-bit blake2b hash (kept for generic keyed
-    hashing in tests; shard ASSIGNMENT is JVM-side — see
-    ``shard_expr``)."""
-    return int.from_bytes(hashlib.blake2b(s.encode("utf-8"), digest_size=8).digest(), "big")
 
 
 def shard_expr(surt_col: str, n_shards: int):
@@ -102,6 +103,50 @@ def packed_test(packed: np.ndarray, positions: list[int]) -> bool:
     return all(packed[p >> 3] & (128 >> (p & 7)) for p in positions)
 
 
+def bloom_bitmap(h1: np.ndarray, n_bits: int, k: int) -> np.ndarray:
+    """The Bloom build kernel: a PACKED bitmap (uint8, ``np.packbits``
+    layout — 8x smaller on disk and in a broadcast, and OR-mergeable
+    byte-wise) with every position of every key in ``h1`` set. A
+    bool scatter plus one pack beats an unbuffered ufunc ``.at``
+    scatter into the packed bytes."""
+    bitmap = np.zeros(n_bits, dtype=bool)
+    bitmap[bloom_positions_vec(h1, n_bits, k).ravel()] = True
+    return np.packbits(bitmap)
+
+
+def bloom_probe(packed: np.ndarray, h1: np.ndarray, n_bits: int, k: int) -> np.ndarray:
+    """The Bloom probe kernel: per-key membership in a PACKED bitmap —
+    a fancy-indexed byte gather + mask, no per-key Python. Agrees
+    with ``packed_test(packed, bloom_positions(s, n_bits, k))``."""
+    pos = bloom_positions_vec(h1, n_bits, k)
+    mask = (128 >> (pos & 7)).astype(np.uint8)
+    return ((packed[pos >> 3] & mask) != 0).all(axis=1)
+
+
+def sidecar_file(bloom_dir: str, shard: int) -> str:
+    return os.path.join(bloom_dir, f"shard={shard}.npy")
+
+
+def load_sidecar(bloom_dir: str, shard: int) -> np.ndarray | None:
+    f = sidecar_file(bloom_dir, shard)
+    return np.load(f) if os.path.exists(f) else None
+
+
+def publish_sidecar(bloom_dir: str, shard: int, packed: np.ndarray, merge: bool) -> None:
+    """Write one shard's sidecar under tmp + rename (readers see the
+    old or the new file, never a torn one). ``merge`` ORs the
+    existing file in first — ``add``'s incremental path; a rollback
+    rebuild replaces it. Module-level on purpose: executor closures
+    call it with plain values and never capture a ``SeenSet``."""
+    f = sidecar_file(bloom_dir, shard)
+    if merge and os.path.exists(f):
+        packed = np.load(f) | packed
+    tmp = os.path.join(bloom_dir, f".tmp.shard={shard}.{os.getpid()}.npy")
+    with open(tmp, "wb") as fh:
+        np.save(fh, packed)
+    os.replace(tmp, f)
+
+
 class SeenSet:
     """Sharded exact seen-table + Bloom sidecars under ``path``.
 
@@ -135,8 +180,9 @@ class SeenSet:
         self.n_shards = n_shards
         self.bits = bits_per_shard
         self.k = n_hashes
+        self._bloom_dir = os.path.join(path, "bloom")
         self._bitmaps: dict[int, np.ndarray] | None = None
-        os.makedirs(os.path.join(path, "bloom"), exist_ok=True)
+        os.makedirs(self._bloom_dir, exist_ok=True)
 
     # -- sidecar format stamp ---------------------------------------------
 
@@ -150,7 +196,7 @@ class SeenSet:
         return f"v2 bloom bits={self.bits} k={self.k} hash=xxh64-mix64"
 
     def _format_file(self) -> str:
-        return os.path.join(self.path, "bloom", "FORMAT")
+        return os.path.join(self._bloom_dir, "FORMAT")
 
     def _check_format(self, create: bool = False) -> None:
         f = self._format_file()
@@ -165,8 +211,7 @@ class SeenSet:
                     "matching parameters"
                 )
             return
-        bloom_dir = os.path.join(self.path, "bloom")
-        if any(n.startswith("shard=") for n in os.listdir(bloom_dir)):
+        if any(n.startswith("shard=") for n in os.listdir(self._bloom_dir)):
             raise ValueError(
                 f"unstamped (pre-v2) seen-set sidecars under {self.path}: "
                 "their layout/hash is incompatible with this version — "
@@ -198,10 +243,9 @@ class SeenSet:
 
     def has_state(self) -> bool:
         """True if any exact rows or Bloom sidecars exist."""
-        bloom = os.path.join(self.path, "bloom")
         return self._has_exact() or (
-            os.path.isdir(bloom)
-            and any(f.startswith("shard=") for f in os.listdir(bloom))
+            os.path.isdir(self._bloom_dir)
+            and any(f.startswith("shard=") for f in os.listdir(self._bloom_dir))
         )
 
     def reset(self) -> None:
@@ -211,8 +255,8 @@ class SeenSet:
         import shutil
 
         shutil.rmtree(self.exact_path, ignore_errors=True)
-        shutil.rmtree(os.path.join(self.path, "bloom"), ignore_errors=True)
-        os.makedirs(os.path.join(self.path, "bloom"), exist_ok=True)
+        shutil.rmtree(self._bloom_dir, ignore_errors=True)
+        os.makedirs(self._bloom_dir, exist_ok=True)
         self._bitmaps = None
 
     # -- updates ---------------------------------------------------------
@@ -246,7 +290,7 @@ class SeenSet:
         """
         self._check_format(create=True)
         n_shards, bits, k = self.n_shards, self.bits, self.k
-        bloom_dir = os.path.join(self.path, "bloom")
+        bloom_dir = self._bloom_dir
         write_parts = min(
             n_shards, self.spark.sparkContext.defaultParallelism
         )
@@ -282,22 +326,10 @@ class SeenSet:
                     ["shard", "surt", "first_round"]
                 ]
             for shard, chunks in per_shard.items():
-                h1 = np.concatenate(chunks)
-                f = os.path.join(bloom_dir, f"shard={shard}.npy")
-                # sidecars are stored PACKED (uint8, np.packbits
-                # layout): 8x smaller on disk/broadcast, and the
-                # OR-merge works directly on packed bytes
-                bitmap = np.zeros(bits, dtype=bool)
-                bitmap[bloom_positions_vec(h1, bits, k).ravel()] = True
-                out = np.packbits(bitmap)
-                if os.path.exists(f):
-                    out = np.load(f) | out
-                tmp = os.path.join(
-                    bloom_dir, f".tmp.shard={shard}.{os.getpid()}.npy"
+                publish_sidecar(
+                    bloom_dir, shard,
+                    bloom_bitmap(np.concatenate(chunks), bits, k), merge=True,
                 )
-                with open(tmp, "wb") as fh:
-                    np.save(fh, out)
-                os.replace(tmp, f)
 
         (
             delta.withColumn("shard", shard_expr("surt", n_shards))
@@ -361,8 +393,8 @@ class SeenSet:
                     if rnd > last_good_round:
                         shutil.rmtree(os.path.join(sd, rd), ignore_errors=True)
 
-        shutil.rmtree(os.path.join(self.path, "bloom"), ignore_errors=True)
-        os.makedirs(os.path.join(self.path, "bloom"), exist_ok=True)
+        shutil.rmtree(self._bloom_dir, ignore_errors=True)
+        os.makedirs(self._bloom_dir, exist_ok=True)
         self._rebuild_sidecars(self.exact_df())
         self._bitmaps = None
 
@@ -372,19 +404,13 @@ class SeenSet:
         cross the driver even for a full-set rebuild."""
         self._check_format(create=True)
         bits, k = self.bits, self.k
-        bloom_dir = os.path.join(self.path, "bloom")
+        bloom_dir = self._bloom_dir
         rows = rows.withColumn("__h1", h1_expr("surt"))
 
         def build_bitmap(key, pdf: pd.DataFrame) -> pd.DataFrame:
             shard = int(key[0])
             h1 = h1_from_int64(pdf["__h1"].to_numpy())
-            bitmap = np.zeros(bits, dtype=bool)
-            bitmap[bloom_positions_vec(h1, bits, k).ravel()] = True
-            out = np.packbits(bitmap)
-            tmp = os.path.join(bloom_dir, f".tmp.shard={shard}.{os.getpid()}.npy")
-            with open(tmp, "wb") as fh:
-                np.save(fh, out)
-            os.replace(tmp, os.path.join(bloom_dir, f"shard={shard}.npy"))
+            publish_sidecar(bloom_dir, shard, bloom_bitmap(h1, bits, k), merge=False)
             return pd.DataFrame({"shard": [shard]})
 
         (
@@ -397,9 +423,6 @@ class SeenSet:
 
     # -- bloom sidecar ---------------------------------------------------
 
-    def _bloom_file(self, shard: int) -> str:
-        return os.path.join(self.path, "bloom", f"shard={shard}.npy")
-
     def load_bitmaps(self) -> dict[int, np.ndarray]:
         """Per-shard PACKED bitmaps (uint8, ``np.packbits`` layout).
         Validates the sidecar FORMAT stamp first — a directory written
@@ -407,12 +430,8 @@ class SeenSet:
         probing false (false negatives)."""
         if self._bitmaps is None:
             self._check_format()
-            out = {}
-            for shard in range(self.n_shards):
-                f = self._bloom_file(shard)
-                if os.path.exists(f):
-                    out[shard] = np.load(f)
-            self._bitmaps = out
+            loaded = {s: load_sidecar(self._bloom_dir, s) for s in range(self.n_shards)}
+            self._bitmaps = {s: bm for s, bm in loaded.items() if bm is not None}
         return self._bitmaps
 
     _POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
@@ -425,11 +444,10 @@ class SeenSet:
         at checkpoint boundaries, not per round)."""
         out = []
         for shard in range(self.n_shards):
-            f = self._bloom_file(shard)
-            if not os.path.exists(f):
-                continue
-            fill = float(self._POPCOUNT8[np.load(f)].sum()) / float(self.bits)
-            out.append({"shard": shard, "fill": round(fill, 6)})
+            bm = load_sidecar(self._bloom_dir, shard)
+            if bm is not None:
+                fill = float(self._POPCOUNT8[bm].sum()) / float(self.bits)
+                out.append({"shard": shard, "fill": round(fill, 6)})
         return out
 
     # -- probe -----------------------------------------------------------
@@ -482,13 +500,6 @@ class SeenSet:
         """
         bitmaps = self.load_bitmaps()
         n_shards, bits, k = self.n_shards, self.bits, self.k
-
-        def probe_vec(bm: np.ndarray, h1: np.ndarray) -> np.ndarray:
-            """Vectorized packed-Bloom membership: fancy-indexed byte
-            gather + mask, no per-key Python."""
-            pos = bloom_positions_vec(h1, bits, k)
-            mask = (128 >> (pos & 7)).astype(np.uint8)
-            return ((bm[pos >> 3] & mask) != 0).all(axis=1)
         flag_cols = [
             c.strip().split()[0] for c in flags_schema.split(",") if c.strip()
         ]
@@ -497,27 +508,46 @@ class SeenSet:
             f"{f.name} {f.dataType.simpleString()}" for f in frontier.schema.fields
         )
 
-        def with_flags(pdf, flag_fn):
-            if flag_fn is None:
-                return pdf
-            extra = flag_fn(pdf)
-            return pdf.assign(**{c: extra[c] for c in extra.columns})
+        def arrow_pass(task_lookup):
+            """The one Arrow pass of every probe mode. ``task_lookup``
+            runs once per task and returns ``shard -> packed bitmap or
+            None`` (the broadcast dict's ``.get`` or a task-local shard
+            loader), or None for a flags-only pass over an empty seen
+            set. Each batch is probed with one ``bloom_probe`` call per
+            distinct shard in it."""
+
+            def run(batches):
+                lookup = task_lookup()
+                flag_fn = row_flags() if row_flags is not None else None
+                for pdf in batches:
+                    out = pdf if lookup is None else pdf.drop(columns=["__shard", "__h1"])
+                    if flag_fn is not None:
+                        extra = flag_fn(out)
+                        out = out.assign(**{c: extra[c] for c in extra.columns})
+                    if lookup is None:
+                        yield out
+                        continue
+                    h1 = h1_from_int64(pdf["__h1"].to_numpy())
+                    shards = pdf["__shard"].to_numpy()
+                    maybe = np.zeros(len(pdf), dtype=bool)
+                    for shard in np.unique(shards):
+                        bm = lookup(int(shard))
+                        if bm is not None:
+                            sel = shards == shard
+                            maybe[sel] = bloom_probe(bm, h1[sel], bits, k)
+                    yield out.assign(
+                        __bloom_maybe=pd.Series(maybe, index=pdf.index, dtype=bool)
+                    )
+
+            return run
 
         if not bitmaps:
             if row_flags is None:
                 return frontier
-
-            def flags_only(batches):
-                flag_fn = row_flags()
-                for pdf in batches:
-                    yield with_flags(pdf, flag_fn)
-
             return frontier.mapInPandas(
-                flags_only, schema=schema_fields + flags_suffix
+                arrow_pass(lambda: None), schema=schema_fields + flags_suffix
             )
 
-        cols = frontier.columns
-        out_cols = cols + flag_cols
         probe_schema = schema_fields + flags_suffix + ", __bloom_maybe boolean"
 
         # shard ids AND the sidecar hash seed come from one JVM
@@ -541,67 +571,28 @@ class SeenSet:
             F.when(notnull, h1_expr(surt_col)).otherwise(F.lit(0)),
         )
 
-        def probe_batch(pdf, packed_lookup):
-            """Probe one Arrow batch grouped by shard — one vectorized
-            call per distinct shard in the batch."""
-            h1 = h1_from_int64(pdf["__h1"].to_numpy())
-            shards = pdf["__shard"].to_numpy()
-            flags = np.zeros(len(pdf), dtype=bool)
-            for shard in np.unique(shards):
-                bm = packed_lookup(int(shard))
-                if bm is None:
-                    continue
-                sel = shards == shard
-                flags[sel] = probe_vec(bm, h1[sel])
-            return flags
-
         if sum(m.nbytes for m in bitmaps.values()) <= self.BROADCAST_LIMIT_BYTES:
+            # probed packed — never unpacked
             b_maps = self.spark.sparkContext.broadcast(bitmaps)
-
-            def probe(batches):
-                packed = b_maps.value  # probed packed — never unpacked
-                flag_fn = row_flags() if row_flags is not None else None
-                for pdf in batches:
-                    flags = probe_batch(pdf, packed.get)
-                    yield with_flags(
-                        pdf.drop(columns=["__shard", "__h1"]), flag_fn
-                    ).assign(
-                        __bloom_maybe=pd.Series(flags, index=pdf.index, dtype=bool)
-                    )
-
-            flagged = with_shard.mapInPandas(probe, schema=probe_schema)
+            flagged = with_shard.mapInPandas(
+                arrow_pass(lambda: b_maps.value.get), schema=probe_schema
+            )
         else:  # shard-partitioned probe: task-local bitmap loads
-            bloom_dir = os.path.join(self.path, "bloom")
+            bloom_dir = self._bloom_dir
             parallelism = self.spark.sparkContext.defaultParallelism
             sharded = with_shard.repartition(
                 max(parallelism, n_shards // 16), "__shard"
             )
-
-            def probe_local(batches):
-                cache: dict[int, np.ndarray] = {}
-
-                def load_shard(shard: int):
-                    if shard not in cache:
-                        f = os.path.join(bloom_dir, f"shard={shard}.npy")
-                        cache[shard] = (
-                            np.load(f) if os.path.exists(f) else None
-                        )
-                    return cache[shard]
-
-                flag_fn = row_flags() if row_flags is not None else None
-                for pdf in batches:
-                    flags = probe_batch(pdf, load_shard)
-                    yield with_flags(
-                        pdf.drop(columns=["__shard", "__h1"]), flag_fn
-                    ).assign(
-                        __bloom_maybe=pd.Series(flags, index=pdf.index, dtype=bool)
-                    )
-
-            flagged = sharded.mapInPandas(probe_local, schema=probe_schema)
+            flagged = sharded.mapInPandas(
+                arrow_pass(
+                    lambda: functools.cache(lambda shard: load_sidecar(bloom_dir, shard))
+                ),
+                schema=probe_schema,
+            )
 
         seen_keys = self.exact_df().select(F.col("surt").alias("__seen_surt"))
         return flagged.join(
             seen_keys,
             (F.col(surt_col) == F.col("__seen_surt")) & F.col("__bloom_maybe"),
             how="left_anti",
-        ).select(*out_cols)
+        ).select(*frontier.columns, *flag_cols)

@@ -61,11 +61,6 @@ def simhash64_sql_expr(text_col: str) -> str:
     )"""
 
 
-@F.pandas_udf(T.LongType())
-def simhash64_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: simhash64(t) if t is not None else None)
-
-
 def rolling_fingerprint(text: str, window: int = 8, mod: int = (1 << 61) - 1) -> int:
     """Winnowing-style document fingerprint: min of rolling polynomial
     hashes over character windows (deterministic, order-sensitive)."""

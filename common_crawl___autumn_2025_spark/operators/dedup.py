@@ -30,7 +30,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..crawl.hashing import bloom_positions_vec, h1_from_int64
 from ..functions.xxh64_sql import xxh64_ctes
 from ..plans import load, register, spread_if_large
 
@@ -345,7 +344,9 @@ def dup_components_star(pairs: DataFrame, max_iters: int = 40) -> DataFrame:
     min(Γ(u) ∪ {u}); small-star(u): every smaller-or-equal neighbor
     (and u itself) re-attaches to that minimum. Both are one
     groupBy + join each; the edge set monotonically flattens into
-    per-component stars rooted at the minimum id.
+    per-component stars rooted at the minimum id. Raises
+    ``RuntimeError`` if no fixpoint is reached within ``max_iters``
+    rounds rather than return partial labels.
     """
     from pyspark.sql import functions as F
 
@@ -415,6 +416,12 @@ def dup_components_star(pairs: DataFrame, max_iters: int = 40) -> DataFrame:
         if new_sig == sig:
             break
         sig = new_sig
+    else:
+        # the edge set may not be stars yet: its labels would be
+        # silently wrong partial components
+        raise RuntimeError(
+            f"dup_components_star: no fixpoint after {max_iters} rounds"
+        )
     # converged: per-component stars rooted at the min id
     sym = edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -1015,10 +1022,26 @@ FROM firsts f LEFT JOIN hist h ON f.digest = h.digest
 """
 
 
-def _d09_relations(spark, sf_dir):
-    """(history-digest relation, batch relation) for d09 — shared by
-    the exact join path and the Bloom-prefiltered path so both
-    variants dedup exactly the same corpora."""
+@register("d09_incremental_dedup", _D09_ORACLE)
+def d09_incremental_dedup(spark, sf_dir):
+    """Incremental exact dedup: the production shape d01 lacks — a
+    NEW crawl batch deduplicated against the HISTORICAL corpus
+    without reprocessing history. Even doc_ids play the historical
+    corpus, odd ones the new batch, and the batch plants both
+    failure modes (copies of history docs under shifted ids ->
+    'dup_history'; intra-batch copies of smaller-id batch docs ->
+    'dup_batch'; dup_history wins when both apply, since the batch
+    copy would not ship regardless of arrival order).
+
+    100 TB shape: history is reduced to DISTINCT content digests
+    before anything moves — the join carries 16-byte keys, never
+    text — and the within-batch first-occurrence window partitions
+    on the same digest key the join uses, so the batch side is
+    hash-partitioned once and reused. The dedup is this one digest
+    join; a Bloom prefilter in front of it (``crawl/seen.py``'s
+    discipline) would return only as the default, together with a
+    workload that shows it wins. NULL-text docs carry no content to
+    compare and are excluded on both sides, mirroring d02/d08."""
     _assert_plant_ids_clear(sf_dir)
     docs = (
         load(spark, sf_dir, "documents")
@@ -1047,95 +1070,7 @@ def _d09_relations(spark, sf_dir):
         .select(F.col("doc_id").cast("long").alias("doc_id"),
                 F.md5("text").alias("digest"))
     )
-    return hist_digests, batch
-
-
-D09_BLOOM_BITS = 1 << 20  # 128 KB packed — sf-scale single bitmap; production
-D09_BLOOM_K = 7           # shards per crawl/seen.py when digests outgrow one
-
-
-def _d09_bloom_join(spark, hist_digests, batch):
-    """The 100 TB prefilter path: a broadcast Bloom over the history
-    digests short-circuits the join for Bloom-NEGATIVE batch rows —
-    genuinely new content, the common case in a daily batch — which
-    never shuffle against history at all. Positives (real dups +
-    false positives, rate ~(1-e^{-kn/m})^k) are confirmed by the
-    exact digest join, so the verdicts are identical to the plain
-    join by construction (no false negatives: every inserted digest
-    tests positive). Same discipline as crawl/seen.py's
-    ``filter_unseen`` and the same hash stack: JVM ``xxhash64`` seeds
-    the positions, ``bloom_positions_vec`` derives k=7 of them, the
-    bitmap stays packed per worker. The build collect is bounded —
-    one 128 KB packed bitmap row per history partition."""
-    n_bytes = D09_BLOOM_BITS // 8
-
-    def build(batches):
-        bm = np.zeros(n_bytes, dtype=np.uint8)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pos = bloom_positions_vec(
-                h1_from_int64(pdf["h1"].to_numpy()), D09_BLOOM_BITS, D09_BLOOM_K
-            )
-            np.bitwise_or.at(bm, pos >> 3, (128 >> (pos & 7)).astype(np.uint8))
-        yield pd.DataFrame({"bm": [bm.tobytes()]})
-
-    bitmap = np.zeros(n_bytes, dtype=np.uint8)
-    for row in (
-        hist_digests.select(F.xxhash64("digest").alias("h1"))
-        .mapInPandas(build, "bm binary")
-        .collect()
-    ):
-        bitmap |= np.frombuffer(row["bm"], dtype=np.uint8)
-    bc = spark.sparkContext.broadcast(bitmap)
-
-    @F.pandas_udf("boolean")
-    def maybe_hist(h1: pd.Series) -> pd.Series:
-        bm = bc.value
-        pos = bloom_positions_vec(
-            h1_from_int64(h1.to_numpy()), D09_BLOOM_BITS, D09_BLOOM_K
-        )
-        mask = (128 >> (pos & 7)).astype(np.uint8)
-        return pd.Series(((bm[pos >> 3] & mask) != 0).all(axis=1))
-
-    probed = batch.withColumn("__maybe", maybe_hist(F.xxhash64("digest")))
-    confirmed = (
-        probed.where(F.col("__maybe"))
-        .join(hist_digests, on="digest", how="left")
-        .select("doc_id", "digest", "in_hist")
-    )
-    negatives = probed.where(~F.col("__maybe")).select(
-        "doc_id", "digest", F.lit(None).cast("int").alias("in_hist")
-    )
-    return confirmed.unionByName(negatives)
-
-
-@register("d09_incremental_dedup", _D09_ORACLE)
-def d09_incremental_dedup(spark, sf_dir, bloom_prefilter=False):
-    """Incremental exact dedup: the production shape d01 lacks — a
-    NEW crawl batch deduplicated against the HISTORICAL corpus
-    without reprocessing history. Even doc_ids play the historical
-    corpus, odd ones the new batch, and the batch plants both
-    failure modes (copies of history docs under shifted ids ->
-    'dup_history'; intra-batch copies of smaller-id batch docs ->
-    'dup_batch'; dup_history wins when both apply, since the batch
-    copy would not ship regardless of arrival order).
-
-    100 TB shape: history is reduced to DISTINCT content digests
-    before anything moves — the join carries 16-byte keys, never
-    text — and the within-batch first-occurrence window partitions
-    on the same digest key the join uses, so the batch side is
-    hash-partitioned once and reused. ``bloom_prefilter=True`` runs
-    the seen.py-style broadcast-Bloom prefilter (``_d09_bloom_join``)
-    so Bloom-negative rows — genuinely new content, the common case —
-    never shuffle against history at all; verdicts are identical
-    (pytest-pinned). NULL-text docs carry no content to compare and
-    are excluded on both sides, mirroring d02/d08."""
-    hist_digests, batch = _d09_relations(spark, sf_dir)
-    if bloom_prefilter:
-        joined = _d09_bloom_join(spark, hist_digests, batch)
-    else:
-        joined = batch.join(hist_digests, on="digest", how="left")
+    joined = batch.join(hist_digests, on="digest", how="left")
     w = Window.partitionBy("digest")
     return (
         joined.withColumn("first_id", F.min("doc_id").over(w))

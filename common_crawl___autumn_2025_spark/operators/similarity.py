@@ -30,25 +30,12 @@ N_TABLES = 6
 ANN_SEED = 42
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def cosine_col(a, b):
-    """JVM-expression cosine. Correct but interpreted (higher-order
-    functions skip codegen) — ~1 ms/row; use cosine_udf on hot paths."""
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
-
-
 @F.pandas_udf(T.DoubleType())
 def cosine_udf(qv: pd.Series, cv: pd.Series) -> pd.Series:
     """Arrow-vectorized cosine: one einsum per batch (float64), ~100x
-    the interpreted expression. Callers round with floor(x*1e6+0.5)/1e6
-    so results hash-match the DuckDB double-precision oracle."""
+    a JVM higher-order-function expression (interpreted, ~1 ms/row).
+    Callers round with floor(x*1e6+0.5)/1e6 so results hash-match the
+    DuckDB double-precision oracle."""
     a = np.stack(qv.to_numpy()).astype(np.float64)
     b = np.stack(cv.to_numpy()).astype(np.float64)
     num = np.einsum("ij,ij->i", a, b)

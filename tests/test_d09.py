@@ -78,39 +78,6 @@ def test_d09_planted_verdicts(spark, tmp_path):
     assert _engine_rows(d09_incremental_dedup(spark, sf)) == _oracle_rows(sf)
 
 
-def test_d09_bloom_prefilter_equals_exact(spark, sf_dir):
-    """The broadcast-Bloom prefilter path must be verdict-identical
-    to the plain join: no false negatives by Bloom construction,
-    false positives resolved by the exact digest confirm."""
-    exact = _engine_rows(d09_incremental_dedup(spark, sf_dir))
-    bloom = _engine_rows(
-        d09_incremental_dedup(spark, sf_dir, bloom_prefilter=True)
-    )
-    assert bloom == exact
-
-
-def test_d09_bloom_prefilter_on_planted(spark, tmp_path):
-    docs = [
-        (0, "alpha alpha"),
-        (2, "beta beta"),
-        (1, "alpha alpha"),
-        (3, "delta delta"),
-        (5, "delta delta"),
-        (7, "fresh fresh"),
-        (9, None),
-    ]
-    sf = str(tmp_path / "sf")
-    spark.createDataFrame(docs, "doc_id long, text string").write.parquet(
-        f"{sf}/documents.parquet"
-    )
-    exact = _engine_rows(d09_incremental_dedup(spark, sf))
-    bloom = _engine_rows(d09_incremental_dedup(spark, sf, bloom_prefilter=True))
-    assert bloom == exact
-    verdicts = {r[0]: r[2] for r in bloom}
-    assert verdicts[1] == "dup_history"
-    assert verdicts[7] == "keep"
-
-
 def test_d09_parallelism_invariance(spark, sf_dir):
     base = _engine_rows(d09_incremental_dedup(spark, sf_dir))
     prev = spark.conf.get("spark.sql.shuffle.partitions")

@@ -391,6 +391,24 @@ def test_label_propagation_cap_falls_back_to_star(spark):
     assert all(c == 500 and n == 21 for c, n in got.values())
 
 
+def test_star_components_raise_without_fixpoint(spark):
+    """Hitting max_iters before the star algorithm converges must
+    raise, not return partial labels (without the check, max_iters=3
+    on this 21-node chain returns component 500 with size 9 and every
+    other node as a singleton)."""
+    from common_crawl___autumn_2025_spark.operators.dedup import (
+        dup_components_star,
+    )
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(500, 520)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        dup_components_star(pairs, max_iters=3).collect()
+    got = {r.doc_id: (r.component, r.csize) for r in dup_components_star(pairs).collect()}
+    assert got == {i: (500, 21) for i in range(500, 521)}
+
+
 def test_v05_kmeans_refinement(spark):
     """Distributed spherical k-means refinement must (a) preserve the
     planted-neighbor recall the raw sampled codebook achieves and

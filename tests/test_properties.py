@@ -15,7 +15,13 @@ from common_crawl___autumn_2025_spark.codecs import (
     encode_image,
     phash64,
 )
-from common_crawl___autumn_2025_spark.crawl.seen import bloom_positions, hash64
+from common_crawl___autumn_2025_spark.crawl.hashing import xxh64_str
+from common_crawl___autumn_2025_spark.crawl.seen import (
+    bloom_bitmap,
+    bloom_positions,
+    bloom_probe,
+    packed_test,
+)
 
 host_label = st.text(
     alphabet="abcdefghijklmnopqrstuvwxyz0123456789", min_size=1, max_size=8
@@ -84,7 +90,29 @@ def test_bloom_positions_valid_and_deterministic(s):
     assert len(pos) == 5
     assert all(0 <= p < bits for p in pos)
     assert pos == bloom_positions(s, bits, 5)
-    assert 0 <= hash64(s) < 1 << 64
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(st.text(max_size=40), min_size=1, max_size=50),
+    st.lists(st.text(max_size=40), max_size=50),
+    st.sampled_from([1 << 6, 1 << 10, 1 << 14]),
+    st.integers(min_value=1, max_value=8),
+)
+def test_bloom_kernels_agree_and_never_miss(added, probed, bits, k):
+    """The build kernel sets every position of every added key (the
+    probe kernel finds all of them), and the vectorized probe agrees
+    with the scalar ``packed_test`` on added and random keys alike."""
+    def h1(keys):
+        return np.array([xxh64_str(s) for s in keys], dtype=np.uint64)
+
+    bm = bloom_bitmap(h1(added), bits, k)
+    assert bm.dtype == np.uint8 and bm.nbytes == bits // 8
+    assert bloom_probe(bm, h1(added), bits, k).all()
+    keys = added + probed
+    assert bloom_probe(bm, h1(keys), bits, k).tolist() == [
+        packed_test(bm, bloom_positions(s, bits, k)) for s in keys
+    ]
 
 
 @settings(max_examples=200, deadline=None)
