@@ -137,18 +137,8 @@ def surt_udf(urls: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(T.StringType())
-def canonical_url_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: canonicalize(u) if u is not None else None)
-
-
-@F.pandas_udf(T.StringType())
 def registered_domain_udf(hosts: pd.Series) -> pd.Series:
     return hosts.map(lambda h: registered_domain(h) if h is not None else None)
-
-
-@F.pandas_udf(T.StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: host_of(u) if u is not None else None)
 
 
 @F.pandas_udf(T.StringType())

@@ -36,8 +36,8 @@ from __future__ import annotations
 import hashlib
 import json
 import re
-import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field
 
 import pandas as pd
@@ -269,13 +269,17 @@ class CrawlEngine:
        Bloom probe with the ROBOTS FLAGS FUSED INTO THE SAME ARROW
        PASS + exact confirm + early-exit filter, eager
        ``localCheckpoint``),
-    2. the seen-set append (one write job) CONCURRENTLY with
+    2. the seen-set append (one write job, on a one-worker executor
+       scoped to the round) CONCURRENTLY with
     3. the schedule+fetch job (politeness window + fetch
        ``mapInPandas`` — fetch is the job's ONLY Python stage, eager
        ``localCheckpoint``), then
     4. one tiny new-matched-seed-ids collect (skipped entirely once
        the matched set outgrows the driver mirror), and
-    5. the four snapshot table writes, submitted concurrently.
+    5. the four snapshot table writes, submitted concurrently while
+       the round's frontier is at most ``concurrent_commit_threshold``
+       rows and one after another above it. The commit runs on the
+       run's one-worker executor and overlaps the next round.
 
     Each round therefore runs exactly one Python worker stage per
     job — at high local parallelism a chained robots->fetch Python
@@ -500,6 +504,76 @@ class CrawlEngine:
             flags, schema=schema_fields + ", " + ROBOTS_FLAGS_SCHEMA
         )
 
+    def _schedule_and_fetch(
+        self, unseen: DataFrame, n_frontier: int, fused_robots: bool
+    ) -> DataFrame:
+        """5. politeness scheduling + 6. fetch — ONE job, with fetch as
+        its ONLY Python stage (robots flags were fused into the
+        Bloom-probe pass; a caller's robots table attaches them here by
+        the broadcast join, still JVM-only). Small rounds rank with a
+        plain per-host window on an explicit host repartition (no
+        sampling job, no offsets broadcast), while rounds above
+        ``salted_politeness_threshold`` use the range-salted
+        construction that bounds any single host's rows per task (same
+        seq values — the invariance tests force both paths). The fetch
+        result is localCheckpoint'ed EAGERLY: the commit writes must
+        never recompute through the politeness pipeline (recompute
+        divergence silently dropped whole hosts; see
+        test_larger_web_fetch_set_identical)."""
+        spec = self.spec
+        flagged = unseen if fused_robots else self._robots_flags(unseen)
+        allowed = flagged.where(F.col("__robots_ok"))
+        sched_cleanup: list = []
+        if n_frontier <= self.salted_politeness_threshold:
+            pre = allowed.repartition(
+                self._parts(n_frontier, self.rows_per_task_fetch), "host"
+            )
+            host_w = Window.partitionBy("host").orderBy("priority", "surt")
+            seqd = pre.withColumn(
+                "seq", F.row_number().over(host_w).cast("long")
+            ).withColumn(
+                "cum_retry_count",
+                F.sum("retry_count").over(
+                    host_w.rowsBetween(Window.unboundedPreceding, 0)
+                ),
+            )
+        else:
+            seqd = with_host_sequence(
+                allowed,
+                partitions=self.partitions,
+                cleanup=sched_cleanup,
+                cumsum_col="retry_count",
+            )
+        # fetch time: crawl-delay spacing plus the reference's backoff
+        # — a retried row delays the host's remaining queue by
+        # backoff_s per prior retry attempt (the reference sleeps
+        # inline in its per-site loop, Matching_P1.py:317-327), so the
+        # per-host gap never drops below the crawl delay.
+        scheduled = (
+            seqd.withColumn(
+                "fetch_ts_offset",
+                (F.col("seq") - 1) * F.col("__delay")
+                + F.col("cum_retry_count") * F.lit(spec.retry_backoff_s),
+            )
+            .withColumn(
+                "batch_id",
+                F.floor(
+                    F.col("fetch_ts_offset") / F.lit(spec.round_budget_s)
+                ).cast("int"),
+            )
+            .drop("__robots_ok", "__delay", "cum_retry_count")
+        )
+        try:
+            return scheduled.mapInPandas(
+                _fetch_map(spec, self.fetcher), schema=FETCHED_SCHEMA
+            ).localCheckpoint(eager=True)
+        finally:
+            # the eager checkpoint holds every row later jobs read, so
+            # the range-salted relation is dead (and on a failed fetch
+            # it must not outlive the round either)
+            for df in sched_cleanup:
+                df.unpersist()
+
     # -- one round -------------------------------------------------------
 
     def run_round(
@@ -524,7 +598,6 @@ class CrawlEngine:
         phase: dict[str, float] = {}
         t0 = time.time()
         parts_cheap = self._parts(n_frontier, self.rows_per_task_cheap)
-        parts_fetch = self._parts(n_frontier, self.rows_per_task_fetch)
 
         # 0. retry rows (re-enqueued transient failures) bypass dedup
         # and the seen gate — they are already in the seen set by
@@ -590,84 +663,18 @@ class CrawlEngine:
         # 4. everything surviving counts as attempted -> seen (surts
         # are unique post-dedup, so added == attempted). The append is
         # independent of the fetch (both read the checkpointed delta),
-        # so it runs CONCURRENTLY with the schedule+fetch job below.
-        add_result: dict = {}
-
-        def _add():
-            try:
-                add_result["n"] = self.seen.add(
-                    unseen.where(F.col("retry_count") == 0).select("surt"),
-                    round_no,
-                    assume_unique=True,
-                )
-            except BaseException as e:  # noqa: BLE001 — re-raised on join
-                add_result["err"] = e
-
-        add_thread = threading.Thread(target=_add, name=f"seen-add-r{round_no}")
-        add_thread.start()
-
-        # 5. politeness scheduling + 6. fetch — ONE job, with fetch as
-        # its ONLY Python stage (robots flags were fused into the
-        # Bloom-probe pass above; a caller's robots table attaches
-        # them here by the broadcast join, still JVM-only). Small
-        # rounds rank with a plain per-host window on an explicit host
-        # repartition (no
-        # sampling job, no offsets broadcast), while rounds above
-        # salted_politeness_threshold use the range-salted
-        # construction that bounds any single host's rows per task
-        # (same seq values — the invariance tests force both paths).
-        # The fetch result is localCheckpoint'ed EAGERLY: the commit
-        # writes must never recompute through the politeness pipeline
-        # (recompute divergence silently dropped whole hosts; see
-        # test_larger_web_fetch_set_identical).
-        flagged = unseen if fused_robots else self._robots_flags(unseen)
-        allowed = flagged.where(F.col("__robots_ok"))
-        sched_cleanup: list = []
-        if n_frontier <= self.salted_politeness_threshold:
-            pre = allowed.repartition(parts_fetch, "host")
-            host_w = Window.partitionBy("host").orderBy("priority", "surt")
-            seqd = pre.withColumn(
-                "seq", F.row_number().over(host_w).cast("long")
-            ).withColumn(
-                "cum_retry_count",
-                F.sum("retry_count").over(
-                    host_w.rowsBetween(Window.unboundedPreceding, 0)
-                ),
+        # so it runs CONCURRENTLY with the schedule+fetch job. Leaving
+        # the block waits for the append even when the fetch raises,
+        # so no seen-set writer outlives the round.
+        with ThreadPoolExecutor(1, thread_name_prefix=f"seen-add-r{round_no}") as pool:
+            added = pool.submit(
+                self.seen.add,
+                unseen.where(F.col("retry_count") == 0).select("surt"),
+                round_no,
+                assume_unique=True,
             )
-        else:
-            seqd = with_host_sequence(
-                allowed,
-                partitions=self.partitions,
-                cleanup=sched_cleanup,
-                cumsum_col="retry_count",
-            )
-        # fetch time: crawl-delay spacing plus the reference's backoff
-        # — a retried row delays the host's remaining queue by
-        # backoff_s per prior retry attempt (the reference sleeps
-        # inline in its per-site loop, Matching_P1.py:317-327), so the
-        # per-host gap never drops below the crawl delay.
-        scheduled = (
-            seqd.withColumn(
-                "fetch_ts_offset",
-                (F.col("seq") - 1) * F.col("__delay")
-                + F.col("cum_retry_count") * F.lit(spec.retry_backoff_s),
-            )
-            .withColumn(
-                "batch_id",
-                F.floor(
-                    F.col("fetch_ts_offset") / F.lit(spec.round_budget_s)
-                ).cast("int"),
-            )
-            .drop("__robots_ok", "__delay", "cum_retry_count")
-        )
-        fetched = scheduled.mapInPandas(
-            _fetch_map(spec, self.fetcher), schema=FETCHED_SCHEMA
-        ).localCheckpoint(eager=True)
-        self._pending_cleanup = sched_cleanup
-        add_thread.join()
-        if "err" in add_result:
-            raise add_result["err"]
-        n_attempted = add_result["n"]
+            fetched = self._schedule_and_fetch(unseen, n_frontier, fused_robots)
+            n_attempted = added.result()
         phase["fetch_and_seen_add"] = round(time.time() - t0, 3)
         t0 = time.time()
 
@@ -776,77 +783,42 @@ class CrawlEngine:
             return self.spark.createDataFrame([], MATCH_SCHEMA)
         return self.spark.read.parquet(*paths)
 
-    # -- pipelined commit helpers ------------------------------------------
+    # -- pipelined commit ----------------------------------------------------
 
-    def _start_commit(
-        self, round_no: int, tables: dict, metrics: dict,
-        fetched: DataFrame, prev_fetched, cleanup: list, concurrent: bool,
-    ) -> dict:
-        """Launch the round's checkpoint commit on a background thread
-        and return a pending record for ``_finish_commit``. While the
-        four table writes run, the main thread proceeds into the NEXT
-        round's dedup/probe/fetch phases (their inputs are the in-
-        memory ``next_frontier`` / matches-delta plans over the
-        eagerly-checkpointed fetch, so nothing they read depends on
-        the commit landing) — this is what removes the core-invariant
-        per-round commit latency from the critical path (VERDICT r4
-        "What's wrong" #1: commit scaled at 0.242 raw because it is
-        fixed job latency, so the only win is overlap)."""
-        holder: dict = {}
-
-        def _commit():
-            try:
-                holder["manifest"] = self.store.commit(
-                    round_no, tables, metrics, self.spec.config_hash(),
-                    concurrent=concurrent,
-                )
-            except BaseException as e:  # noqa: BLE001 — re-raised on join
-                holder["err"] = e
-
-        th = threading.Thread(target=_commit, name=f"commit-r{round_no}")
-        th.start()
-        return {
-            "thread": th, "holder": holder, "round_no": round_no,
-            "fetched": fetched, "prev_fetched": prev_fetched,
-            "cleanup": cleanup,
-        }
-
-    def _finish_commit(self, pending: dict, summary: dict) -> dict:
-        """Join a pending commit; append its summary entry (including
-        how long the join actually blocked — the commit's residual
-        critical-path cost); release relations no plan can still
-        reference. The PREVIOUS round's checkpointed fetch is the one
-        freed here, not this round's: this round's matches-delta and
-        next-frontier plans (written by the just-joined commit, and
-        consumed by the round that ran concurrently with it) read the
-        previous round's checkpoint until this commit lands."""
+    def _finish_commit(self, pending: tuple, summary: dict) -> dict:
+        """Wait for a pending commit ``(future, round_no, fetched,
+        prev_fetched)``; append its summary entry (including how long
+        the wait actually blocked — the commit's residual critical-path
+        cost); release relations no plan can still reference. The
+        PREVIOUS round's checkpointed fetch is the one freed here, not
+        this round's: this round's matches-delta and next-frontier
+        plans (written by the just-finished commit, and consumed by the
+        round that ran concurrently with it) read the previous round's
+        checkpoint until this commit lands."""
+        future, round_no, fetched, prev_fetched = pending
         t0 = time.time()
-        pending["thread"].join()
-        wait = round(time.time() - t0, 3)
-        if "err" in pending["holder"]:
+        try:
+            manifest = future.result()
+        except BaseException:
             # release the held relations even when the commit failed —
             # a long-lived session that catches the error and retries
-            # must not accumulate orphaned checkpoint/persist blocks
-            if pending["prev_fetched"] is not None:
-                pending["prev_fetched"].unpersist()
-            for df in pending["cleanup"]:
-                df.unpersist()
-            pending["fetched"].unpersist()
-            raise pending["holder"]["err"]
-        manifest = pending["holder"]["manifest"]
+            # must not accumulate orphaned checkpoint blocks
+            if prev_fetched is not None:
+                prev_fetched.unpersist()
+            fetched.unpersist()
+            raise
+        wait = round(time.time() - t0, 3)
         round_entry = {
             **manifest["metrics"],
-            "round": pending["round_no"],
+            "round": round_no,
             "snapshot_id": manifest["snapshot_id"],
         }
         round_entry["phase_sec"] = {
             **round_entry.get("phase_sec", {}), "commit_wait": wait,
         }
         summary["rounds"].append(round_entry)
-        if pending["prev_fetched"] is not None:
-            pending["prev_fetched"].unpersist()
-        for df in pending["cleanup"]:
-            df.unpersist()
+        if prev_fetched is not None:
+            prev_fetched.unpersist()
         return manifest
 
     def run(self, seeds: list[str], resume: bool = False) -> dict:
@@ -901,39 +873,40 @@ class CrawlEngine:
             frontier_count = self.store.read_manifest(start_round - 1)["tables"][
                 "frontier"
             ]["rows"]
-        # PIPELINED COMMIT: round R's four checkpoint writes run on a
-        # background thread while the main thread counts the next
-        # frontier, updates the matched-id mirror, and runs round
-        # R+1's dedup/probe/fetch — the commit only re-enters the
-        # critical path as the (usually ~0) join wait at round R+1's
-        # own commit point. Crash window unchanged in spirit: a death
-        # while commit R is in flight resumes from R-1, and
+        # PIPELINED COMMIT: round R's four checkpoint writes run on the
+        # run's one-worker commit executor while the main thread counts
+        # the next frontier, updates the matched-id mirror, and runs
+        # round R+1's dedup/probe/fetch (nothing they read depends on
+        # the commit landing) — the commit only re-enters the critical
+        # path as the (usually ~0) wait at round R+1's own commit
+        # point. Leaving the block, on an error too, waits for the
+        # in-flight commit, so none outlives run(). Crash window: a
+        # death while commit R is in flight resumes from R-1, and
         # ``seen.rollback`` discards rounds R / R+1's seen deltas —
         # the byte-identical-resume tests force this window.
-        pending: dict | None = None
+        pending: tuple | None = None
         prev_fetched: DataFrame | None = None
-        try:
+        with ThreadPoolExecutor(1, thread_name_prefix="commit") as commits:
             for round_no in range(start_round, spec.max_rounds):
                 if frontier_count == 0:
                     break
                 nxt, fetched, match_delta, records, metrics = self.run_round(
                     round_no, frontier, matches, frontier_count=frontier_count
                 )
-                cleanup = getattr(self, "_pending_cleanup", [])
-                self._pending_cleanup = []
                 if pending is not None:
                     self._finish_commit(pending, summary)
                     # committed-state re-read truncates the matches
                     # lineage to (multi-path committed scan) + (one
                     # in-memory delta) — without it the union chain
                     # would pin every prior round's checkpointed fetch
-                    matches = self.read_matches_cum(pending["round_no"])
+                    matches = self.read_matches_cum(pending[1])
                     matches = matches.unionByName(match_delta)
                 write_parts = self._parts(frontier_count, 8192)
                 fetch_log = fetched.drop("bytes", "admitted", "caption").coalesce(
                     write_parts
                 )
-                pending = self._start_commit(
+                future = commits.submit(
+                    self.store.commit,
                     round_no,
                     {
                         "frontier": nxt,
@@ -949,11 +922,10 @@ class CrawlEngine:
                         "records": records,
                     },
                     metrics,
-                    fetched,
-                    prev_fetched,
-                    cleanup,
+                    spec.config_hash(),
                     concurrent=frontier_count <= self.concurrent_commit_threshold,
                 )
+                pending = (future, round_no, fetched, prev_fetched)
                 prev_fetched = fetched
                 if round_no == start_round:
                     # first iteration: no prior commit to fold at, so
@@ -1018,9 +990,5 @@ class CrawlEngine:
                 frontier = nxt
             if pending is not None:
                 self._finish_commit(pending, summary)
-                pending["fetched"].unpersist()
-                pending = None
-        finally:
-            if pending is not None:  # exception path: never leak the thread
-                pending["thread"].join()
+                pending[2].unpersist()
         return summary

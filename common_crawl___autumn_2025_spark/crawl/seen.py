@@ -13,9 +13,12 @@ equivalent is:
 - a per-shard PACKED Bloom-bitmap sidecar, built and merged entirely
   by executor tasks (each shard's rows land in one task, which
   publishes its own ``shard=N.npy`` under tmp+rename), used as a
-  cheap *prefilter* for the anti-join. The driver never holds bitmap
-  bytes — at the 4096-shard design point that path would move GBs
-  per round through ``collect()``.
+  cheap *prefilter* for the anti-join. Builds never move bitmap bytes
+  through the driver; probes do. Each ``filter_unseen`` call reads
+  every sidecar on the driver (``load_bitmaps``, cached until the
+  next write), and while they total at most ``BROADCAST_LIMIT_BYTES``
+  (64 MiB) broadcasts them. Above the limit each probe task loads
+  only its own shards' files instead.
 
 The Bloom logic exists once, as three module-level kernels that the
 executor closures call (they never capture ``self``):

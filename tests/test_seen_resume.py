@@ -508,3 +508,120 @@ def test_incremental_and_rebuilt_sidecars_are_byte_identical(spark):
         assert sidecars() == incremental
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# a failed round leaves no engine thread behind
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def deep_spec():
+    return CrawlSpec(web=syn.WebConfig(n_hosts=40), max_depth=2, max_rounds=3)
+
+
+def _engine_threads():
+    import threading
+
+    return [
+        t.name for t in threading.enumerate()
+        if t.is_alive() and t.name.startswith(("seen-add", "commit"))
+    ]
+
+
+def _slow_seen_add(monkeypatch, delay_s=1.5):
+    """Delay every ``SeenSet.add`` — a large round's append — so the
+    round's other jobs finish (or fail) while it is still running."""
+    import time
+
+    real_add = SeenSet.add
+
+    def slow_add(self, *args, **kwargs):
+        time.sleep(delay_s)
+        return real_add(self, *args, **kwargs)
+
+    monkeypatch.setattr(SeenSet, "add", slow_add)
+
+
+def test_failed_fetch_leaves_no_seen_writer(spark, deep_spec, monkeypatch):
+    """Round 1's fetch job fails while its seen-set append is still
+    running. ``run()`` must not return before the append ends: an
+    orphaned append landing after a resume's rollback would hide URLs
+    from the resumed crawl and duplicate seen rows."""
+    from urllib.parse import urlsplit
+
+    from common_crawl___autumn_2025_spark.crawl import oracle
+    from common_crawl___autumn_2025_spark.crawl.fetchers import SyntheticFetcher
+
+    class HomepagesOnly(SyntheticFetcher):
+        def fetch(self, url, attempt=0):
+            if urlsplit(url).path not in ("", "/"):
+                raise RuntimeError("injected fetch failure")
+            return syn.fetch_page(self.web, url, attempt=attempt)
+
+    seeds = syn.seed_urls(deep_spec.web, 40)
+    root = tempfile.mkdtemp(prefix="ck_fetchfail_")
+    try:
+        _slow_seen_add(monkeypatch)
+        failing = CrawlEngine(
+            spark, deep_spec, root, partitions=2,
+            fetcher=HomepagesOnly(deep_spec.web),
+        )
+        with pytest.raises(Exception, match="injected fetch failure"):
+            failing.run(seeds)
+        assert _engine_threads() == []
+        assert failing.store.latest_round() == 0
+
+        resumed = CrawlEngine(spark, deep_spec, root, partitions=2)
+        resumed.run(seeds, resume=True)
+        want = oracle.crawl(deep_spec, seeds)
+        log, seen, matches = _crawl_state(resumed)
+        assert log == sorted((r[0], r[1], r[2], r[3], r[7]) for r in want.fetch_log)
+        assert seen == sorted(want.seen)
+        assert matches == sorted(
+            (sid, m[1], m[2], m[3]) for sid, m in want.matches.items()
+        )
+        assert resumed.seen.exact_df().count() == len(seen)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_failed_commit_resumes_exactly(spark, deep_spec, monkeypatch):
+    """Round 1's checkpoint commit fails on the commit executor while
+    round 2 runs: ``run()`` raises that error once round 2's seen-set
+    append has ended, leaves no engine thread, and a resume from
+    round 0 equals the uninterrupted run."""
+    from common_crawl___autumn_2025_spark.crawl.checkpoints import CheckpointStore
+
+    seeds = syn.seed_urls(deep_spec.web, 40)
+    root_full = tempfile.mkdtemp(prefix="ck_commitfull_")
+    root_fail = tempfile.mkdtemp(prefix="ck_commitfail_")
+    try:
+        full = CrawlEngine(spark, deep_spec, root_full, partitions=2)
+        full.run(seeds)
+
+        real_commit = CheckpointStore.commit
+        failed = []
+
+        def commit_fails_once(self, round_no, *args, **kwargs):
+            if round_no == 1 and not failed:
+                failed.append(round_no)
+                raise RuntimeError("injected commit failure")
+            return real_commit(self, round_no, *args, **kwargs)
+
+        monkeypatch.setattr(CheckpointStore, "commit", commit_fails_once)
+        _slow_seen_add(monkeypatch)
+        failing = CrawlEngine(spark, deep_spec, root_fail, partitions=2)
+        with pytest.raises(RuntimeError, match="injected commit failure"):
+            failing.run(seeds)
+        assert failed == [1]
+        assert _engine_threads() == []
+        assert failing.store.latest_round() == 0
+
+        resumed = CrawlEngine(spark, deep_spec, root_fail, partitions=2)
+        resumed.run(seeds, resume=True)
+        assert _crawl_state(resumed) == _crawl_state(full)
+        assert resumed.seen.exact_df().count() == len(_crawl_state(full)[1])
+    finally:
+        shutil.rmtree(root_full, ignore_errors=True)
+        shutil.rmtree(root_fail, ignore_errors=True)
