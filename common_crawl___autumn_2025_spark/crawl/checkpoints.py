@@ -28,6 +28,7 @@ import json
 import os
 import shutil
 import time
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -65,18 +66,18 @@ class CheckpointStore:
         # Metadata/bitmap IO uses plain POSIX calls (os, pyarrow local
         # reads, np.load in executor tasks), so the root must be a
         # local-scheme path on storage shared by driver and executors
-        # (NFS on a cluster). A URI like hdfs:// would silently split
-        # the store: Spark writes would go to HDFS while manifests and
-        # Bloom sidecars land in a bogus local "hdfs:" directory.
-        scheme = root.split("://", 1)[0] if "://" in root else ""
-        if scheme not in ("", "file"):
+        # (NFS on a cluster). Any other URI would silently split the
+        # store: Spark writes would go to its scheme while manifests and
+        # Bloom sidecars land in a bogus local "hdfs:" (or "file:")
+        # directory, so a ``file:`` URI in any form becomes its path.
+        parts = urlsplit(root)
+        if parts.scheme not in ("", "file"):
             raise ValueError(
                 f"checkpoint root must be a POSIX path shared by driver "
-                f"and executors (got scheme {scheme!r}); route it through "
-                f"a mounted filesystem instead"
+                f"and executors (got scheme {parts.scheme!r}); route it "
+                f"through a mounted filesystem instead"
             )
-        if root.startswith("file://"):
-            root = root[len("file://"):]
+        root = parts.path if parts.scheme else root
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)

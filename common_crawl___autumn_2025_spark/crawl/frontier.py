@@ -69,6 +69,14 @@ FETCHED_SCHEMA = FRONTIER_SCHEMA + (
 MATCH_SCHEMA = "seed_id long, url string, surt string, target_number string, round int"
 
 
+def release(df: DataFrame) -> None:
+    """Drop the blocks of an eager ``localCheckpoint``. Its logical
+    plan is a ``LogicalRDD`` over the checkpointed RDD, and only that
+    RDD's own unpersist frees them: ``DataFrame.unpersist()`` touches
+    the cache manager, which never held a local checkpoint."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 @dataclass(frozen=True)
 class CrawlSpec:
     """Everything that defines a crawl's semantics (hashed into the
@@ -266,9 +274,10 @@ class CrawlEngine:
     latency, so fixed per-round cost is the enemy): one round runs
 
     1. ONE job materializing the deduped-unseen delta (window dedup +
-       Bloom probe with the ROBOTS FLAGS FUSED INTO THE SAME ARROW
-       PASS + exact confirm + early-exit filter, eager
-       ``localCheckpoint``),
+       Bloom probe, each task loading its shards' sidecar files, with
+       the ROBOTS FLAGS FUSED INTO THE SAME ARROW PASS + exact
+       confirm + early-exit filter, eager ``localCheckpoint``,
+       released once the round's fetch has read it),
     2. the seen-set append (one write job, on a one-worker executor
        scoped to the round) CONCURRENTLY with
     3. the schedule+fetch job (politeness window + fetch
@@ -291,9 +300,9 @@ class CrawlEngine:
     tasks, while a 10^7-row round fans out to the full cluster.
     Early-exit / first-match filtering uses a driver-held matched-seed
     id set (``isin``) below ``matched_isin_limit``, a broadcast
-    anti-join above it, and a left_anti join against the checkpointed
-    ``matches`` table once the set passes ``matched_mirror_limit`` (no
-    driver state at the 10^7+-matches design point). Robots rules
+    anti-join above it, and a left_anti join against the matched seed
+    ids (committed ``matches`` plus the last round's hits) once the set
+    passes ``matched_mirror_limit`` (no driver state at 10^7+ matches). Robots rules
     have one path per source: the web config's rules are computed
     inside the Bloom-probe Arrow pass, and a caller's robots table is
     always broadcast-joined (``robots.with_robots_flags``).
@@ -343,7 +352,7 @@ class CrawlEngine:
         self.fetcher = fetcher or SyntheticFetcher(spec.web)
         self.seen = SeenSet(
             spark,
-            checkpoint_root + "/seen",
+            self.store.root + "/seen",
             n_shards=spec.seen_shards,
             bits_per_shard=spec.seen_bits_per_shard,
             filter_kind=spec.seen_filter,
@@ -371,8 +380,8 @@ class CrawlEngine:
           and reused by every plan in the round — cheaper than both a
           giant In() literal list and a matches-parquet rescan);
         - mirror invalid or past ``matched_mirror_limit``: left_anti
-          join against ``matches`` itself (the checkpointed source of
-          truth) — one small shuffle, no driver state, the only path
+          join against ``matches`` itself (committed and checkpointed
+          state) — one small shuffle, no driver state, the only path
           that is safe at 10^7+ satisfied seeds and for standalone
           ``run_round`` callers whose engine state ``run()`` never
           seeded."""
@@ -666,15 +675,20 @@ class CrawlEngine:
         # so it runs CONCURRENTLY with the schedule+fetch job. Leaving
         # the block waits for the append even when the fetch raises,
         # so no seen-set writer outlives the round.
-        with ThreadPoolExecutor(1, thread_name_prefix=f"seen-add-r{round_no}") as pool:
-            added = pool.submit(
-                self.seen.add,
-                unseen.where(F.col("retry_count") == 0).select("surt"),
-                round_no,
-                assume_unique=True,
-            )
-            fetched = self._schedule_and_fetch(unseen, n_frontier, fused_robots)
-            n_attempted = added.result()
+        try:
+            with ThreadPoolExecutor(1, thread_name_prefix=f"seen-add-r{round_no}") as pool:
+                added = pool.submit(
+                    self.seen.add,
+                    unseen.where(F.col("retry_count") == 0).select("surt"),
+                    round_no,
+                    assume_unique=True,
+                )
+                fetched = self._schedule_and_fetch(unseen, n_frontier, fused_robots)
+                n_attempted = added.result()
+        finally:
+            # both readers are done: the append has ended and the fetch
+            # is checkpointed on its own blocks
+            release(unseen)
         phase["fetch_and_seen_add"] = round(time.time() - t0, 3)
         t0 = time.time()
 
@@ -786,27 +800,12 @@ class CrawlEngine:
     # -- pipelined commit ----------------------------------------------------
 
     def _finish_commit(self, pending: tuple, summary: dict) -> dict:
-        """Wait for a pending commit ``(future, round_no, fetched,
-        prev_fetched)``; append its summary entry (including how long
-        the wait actually blocked — the commit's residual critical-path
-        cost); release relations no plan can still reference. The
-        PREVIOUS round's checkpointed fetch is the one freed here, not
-        this round's: this round's matches-delta and next-frontier
-        plans (written by the just-finished commit, and consumed by the
-        round that ran concurrently with it) read the previous round's
-        checkpoint until this commit lands."""
-        future, round_no, fetched, prev_fetched = pending
+        """Wait for a pending commit ``(future, round_no)`` and append
+        its summary entry, including how long the wait actually
+        blocked — the commit's residual critical-path cost."""
+        future, round_no = pending
         t0 = time.time()
-        try:
-            manifest = future.result()
-        except BaseException:
-            # release the held relations even when the commit failed —
-            # a long-lived session that catches the error and retries
-            # must not accumulate orphaned checkpoint blocks
-            if prev_fetched is not None:
-                prev_fetched.unpersist()
-            fetched.unpersist()
-            raise
+        manifest = future.result()
         wait = round(time.time() - t0, 3)
         round_entry = {
             **manifest["metrics"],
@@ -817,8 +816,6 @@ class CrawlEngine:
             **round_entry.get("phase_sec", {}), "commit_wait": wait,
         }
         summary["rounds"].append(round_entry)
-        if prev_fetched is not None:
-            prev_fetched.unpersist()
         return manifest
 
     def run(self, seeds: list[str], resume: bool = False) -> dict:
@@ -884,111 +881,112 @@ class CrawlEngine:
         # death while commit R is in flight resumes from R-1, and
         # ``seen.rollback`` discards rounds R / R+1's seen deltas —
         # the byte-identical-resume tests force this window.
+        #
+        # ``held`` owns the fetch checkpoints a later plan may still
+        # read. Every relation carried into round R+1 (its frontier and
+        # the ``matches`` seed-id set) reads round R's fetch and
+        # nothing older, so commit R reads rounds R and R-1: once commit
+        # R-1 has landed, all but the last two are freed. The
+        # ``finally`` frees the rest after the block has waited for the
+        # in-flight commit.
         pending: tuple | None = None
-        prev_fetched: DataFrame | None = None
-        with ThreadPoolExecutor(1, thread_name_prefix="commit") as commits:
-            for round_no in range(start_round, spec.max_rounds):
-                if frontier_count == 0:
-                    break
-                nxt, fetched, match_delta, records, metrics = self.run_round(
-                    round_no, frontier, matches, frontier_count=frontier_count
-                )
+        held: list[DataFrame] = []
+        try:
+            with ThreadPoolExecutor(1, thread_name_prefix="commit") as commits:
+                for round_no in range(start_round, spec.max_rounds):
+                    if frontier_count == 0:
+                        break
+                    nxt, fetched, match_delta, records, metrics = self.run_round(
+                        round_no, frontier, matches, frontier_count=frontier_count
+                    )
+                    held.append(fetched)
+                    # seed ids with any target hit this round. As a
+                    # membership set, (matched through R-1) ∪ hits equals
+                    # (matched through R-1) ∪ delta: a seed that hits now
+                    # but is missing from the delta had already matched.
+                    # Unlike the delta (an anti-join against the previous
+                    # ``matches``), it reads only this round's fetch.
+                    hits = fetched.where(
+                        (F.col("status") == 200) & (F.col("target_number") != "")
+                    ).select("seed_id")
+                    if pending is not None:
+                        self._finish_commit(pending, summary)
+                        for df in held[:-2]:
+                            release(df)
+                        del held[:-2]
+                        matches = (
+                            self.read_matches_cum(pending[1])
+                            .select("seed_id")
+                            .unionByName(hits)
+                        )
+                    write_parts = self._parts(frontier_count, 8192)
+                    fetch_log = fetched.drop("bytes", "admitted", "caption").coalesce(
+                        write_parts
+                    )
+                    future = commits.submit(
+                        self.store.commit,
+                        round_no,
+                        {
+                            "frontier": nxt,
+                            "fetch_log": fetch_log,
+                            # PER-ROUND DELTA: only this round's new
+                            # matches are written; cumulative state is
+                            # the multi-path read (read_matches_cum).
+                            # Repartition, NOT coalesce: coalesce(1) over
+                            # the window plan measured 6× slower than the
+                            # explicit tiny shuffle (it drags the window
+                            # stage into the single coalesced task)
+                            "matches": match_delta.repartition(write_parts),
+                            "records": records,
+                        },
+                        metrics,
+                        spec.config_hash(),
+                        concurrent=frontier_count <= self.concurrent_commit_threshold,
+                    )
+                    pending = (future, round_no)
+                    if round_no == start_round:
+                        # first iteration: no prior commit to fold at, so
+                        # the hits join the pre-loop cumulative base here
+                        matches = matches.select("seed_id").unionByName(hits)
+                    # mirror update first, then the next-frontier count:
+                    # once the round's hits are folded into the driver
+                    # mirror, count(next_frontier) collapses to ONE
+                    # aggregate over the checkpointed fetch
+                    # (_next_frontier_count_fast) instead of a multi-stage
+                    # job re-deriving the new-matches window subtree
+                    # (r7, idle host: 0.6-1.9 s against ~0.2-0.3 s). The
+                    # mirror needs only the SET of seed ids with a hit, so
+                    # the collect is one narrow stage over ``hits``; ids
+                    # the mirror already holds are dropped in the same
+                    # stage, bounding driver transfer by this round's
+                    # newly matched seeds even with early_exit off.
+                    if self._mirror_valid:
+                        self._matched_ids.update(
+                            r[0] for r in self._filter_unmatched(hits, None).collect()
+                        )
+                        if len(self._matched_ids) > self.matched_mirror_limit:
+                            self._mirror_valid = False
+                            self._matched_ids = set()
+                            self._matched_df_n = None
+                    if round_no + 1 >= spec.max_rounds:
+                        # final round: the count's ONLY consumers are the
+                        # next iteration's loop gate, sizing, and metrics
+                        # — none of which exist past max_rounds. A later
+                        # resume reads the committed frontier table's row
+                        # count from the manifest, never driver memory,
+                        # so skipping the job here changes nothing.
+                        frontier_count = None
+                    elif (
+                        self._mirror_valid
+                        and len(self._matched_ids) <= self.fast_count_mirror_limit
+                    ):
+                        frontier_count = self._next_frontier_count_fast(fetched)
+                    else:
+                        frontier_count = nxt.count()
+                    frontier = nxt
                 if pending is not None:
                     self._finish_commit(pending, summary)
-                    # committed-state re-read truncates the matches
-                    # lineage to (multi-path committed scan) + (one
-                    # in-memory delta) — without it the union chain
-                    # would pin every prior round's checkpointed fetch
-                    matches = self.read_matches_cum(pending[1])
-                    matches = matches.unionByName(match_delta)
-                write_parts = self._parts(frontier_count, 8192)
-                fetch_log = fetched.drop("bytes", "admitted", "caption").coalesce(
-                    write_parts
-                )
-                future = commits.submit(
-                    self.store.commit,
-                    round_no,
-                    {
-                        "frontier": nxt,
-                        "fetch_log": fetch_log,
-                        # PER-ROUND DELTA: only this round's new matches
-                        # are written; cumulative state is the multi-path
-                        # read (read_matches_cum). Repartition, NOT
-                        # coalesce: coalesce(1) over the window plan
-                        # measured 6× slower than the explicit tiny
-                        # shuffle (it drags the window stage into the
-                        # single coalesced task)
-                        "matches": match_delta.repartition(write_parts),
-                        "records": records,
-                    },
-                    metrics,
-                    spec.config_hash(),
-                    concurrent=frontier_count <= self.concurrent_commit_threshold,
-                )
-                pending = (future, round_no, fetched, prev_fetched)
-                prev_fetched = fetched
-                if round_no == start_round:
-                    # first iteration: no prior commit to fold at, so
-                    # the delta joins the pre-loop cumulative base here
-                    matches = matches.unionByName(match_delta)
-                # mirror update first (tiny collect over the
-                # checkpointed delta), then the next-frontier count:
-                # once the round's delta is folded into the driver
-                # mirror, count(next_frontier) collapses to ONE
-                # aggregate over the checkpointed fetch
-                # (_next_frontier_count_fast) instead of a multi-stage
-                # job re-deriving the new-matches window subtree the
-                # collect just materialized (guide §2.4). Measured (r7,
-                # idle host): the count job alone was 0.6-0.9 s and
-                # 1.3-1.9 s while contending with the concurrent
-                # commit writes; the aggregate reads ~0.2-0.3 s.
-                # The mirror needs only the SET of seed ids with any
-                # hit this round (set-union with the old ids is
-                # idempotent, so neither the delta's already-matched
-                # filter nor its first-row window changes the result)
-                # — so read the hit rows straight off the checkpointed
-                # fetch: a narrow single-stage collect instead of the
-                # delta's window+filter job. Hit rows of seeds the
-                # mirror already holds are dropped before the collect
-                # (an isin/broadcast filter in the same stage, no
-                # extra job), so driver transfer is bounded by this
-                # round's newly matched seeds' hit pages even with
-                # early_exit off; the matched_mirror_limit
-                # invalidation below still caps driver state at the
-                # design point.
-                if self._mirror_valid:
-                    hits = fetched.where(
-                        (F.col("status") == 200)
-                        & (F.col("target_number") != "")
-                    )
-                    new_ids = [
-                        r[0]
-                        for r in self._filter_unmatched(hits, None)
-                        .select("seed_id")
-                        .collect()
-                    ]
-                    self._matched_ids.update(new_ids)
-                    if len(self._matched_ids) > self.matched_mirror_limit:
-                        self._mirror_valid = False
-                        self._matched_ids = set()
-                        self._matched_df_n = None
-                if round_no + 1 >= spec.max_rounds:
-                    # final round: the count's ONLY consumers are the
-                    # next iteration's loop gate, sizing, and metrics
-                    # — none of which exist past max_rounds. A later
-                    # resume reads the committed frontier table's row
-                    # count from the manifest, never driver memory,
-                    # so skipping the job here changes nothing.
-                    frontier_count = None
-                elif (
-                    self._mirror_valid
-                    and len(self._matched_ids) <= self.fast_count_mirror_limit
-                ):
-                    frontier_count = self._next_frontier_count_fast(fetched)
-                else:
-                    frontier_count = nxt.count()
-                frontier = nxt
-            if pending is not None:
-                self._finish_commit(pending, summary)
-                pending[2].unpersist()
+        finally:
+            for df in held:
+                release(df)
         return summary

@@ -169,7 +169,7 @@ def test_shard_partitioned_probe_path(spark, small_spec, monkeypatch):
     from common_crawl___autumn_2025_spark.crawl import oracle
     from common_crawl___autumn_2025_spark.crawl.seen import SeenSet
 
-    monkeypatch.setattr(SeenSet, "BROADCAST_LIMIT_BYTES", 0)
+    monkeypatch.setattr(SeenSet, "SHARD_PROBE_LIMIT_BYTES", 0)
     seeds = syn.seed_urls(small_spec.web, 10)
     o = oracle.crawl(small_spec, seeds)
     root = tempfile.mkdtemp(prefix="probe_path_")
@@ -184,6 +184,46 @@ def test_shard_partitioned_probe_path(spark, small_spec, monkeypatch):
         want = sorted((r[0], r[1], r[2], r[3], r[7]) for r in o.fetch_log)
         assert got == want
         assert {r.surt for r in eng.seen.exact_df().collect()} == o.seen
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.parametrize("shard_limit", [None, 0], ids=["in_place", "sharded"])
+def test_probe_reads_no_sidecar_on_driver(spark, monkeypatch, shard_limit):
+    """Probe tasks load the sidecars themselves: ``filter_unseen``
+    neither reads a sidecar on the driver nor broadcasts bitmaps, in
+    either probe layout. The counters run in this (driver) process;
+    tasks only ever see pickled copies of them."""
+    from pyspark import SparkContext
+
+    from common_crawl___autumn_2025_spark.crawl import seen as seen_mod
+
+    root = tempfile.mkdtemp(prefix="seen_driver_")
+    try:
+        seen = SeenSet(spark, root, n_shards=4, bits_per_shard=1 << 12)
+        surts = [f"com,drv{i:03d})/" for i in range(60)]
+        seen.add(spark.createDataFrame([(s,) for s in surts], "surt string"), 0)
+        if shard_limit is not None:
+            monkeypatch.setattr(SeenSet, "SHARD_PROBE_LIMIT_BYTES", shard_limit)
+        calls = {"broadcast": 0, "load_sidecar": 0}
+        real_broadcast, real_load = SparkContext.broadcast, seen_mod.load_sidecar
+
+        def counting_broadcast(self, value):
+            calls["broadcast"] += 1
+            return real_broadcast(self, value)
+
+        def counting_load(bloom_dir, shard):
+            calls["load_sidecar"] += 1
+            return real_load(bloom_dir, shard)
+
+        monkeypatch.setattr(SparkContext, "broadcast", counting_broadcast)
+        monkeypatch.setattr(seen_mod, "load_sidecar", counting_load)
+        probe = spark.createDataFrame(
+            [(s,) for s in surts[:20]] + [("org,fresh)/",)], "surt string"
+        )
+        out = {r.surt for r in seen.filter_unseen(probe).collect()}
+        assert out == {"org,fresh)/"}
+        assert calls == {"broadcast": 0, "load_sidecar": 0}
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -235,6 +275,26 @@ def test_checkpoint_store_rejects_uri_scheme(spark):
 
     with pytest.raises(ValueError, match="POSIX path"):
         CheckpointStore(spark, "hdfs:///crawl/ckpt")
+
+
+def test_checkpoint_store_accepts_file_uri(spark, tmp_path, monkeypatch):
+    """A ``file:`` root is its path: commits and reads land there, and
+    nothing is created under the working directory (a literal
+    "file:" directory would split the manifests from Spark's parquet)."""
+    from common_crawl___autumn_2025_spark.crawl.checkpoints import (
+        CheckpointStore,
+    )
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    store = CheckpointStore(spark, "file:" + str(tmp_path / "ck"))
+    assert store.root == str(tmp_path / "ck")
+    m = store.commit(0, {"t": spark.range(5)}, {}, "h")
+    assert m["tables"]["t"]["rows"] == 5
+    assert store.latest_round() == 0
+    assert sorted(r.id for r in store.read_table(0, "t").collect()) == list(range(5))
+    assert os.listdir(cwd) == []
 
 
 def test_lineage_terminates_on_recommit(spark, small_spec, tmp_path):
@@ -296,6 +356,8 @@ def test_sidecar_format_stamp_guards_incompatible_state(spark):
         other = SeenSet(spark, root, n_shards=2, bits_per_shard=1 << 13)
         with pytest.raises(ValueError, match="incompatible"):
             other.load_bitmaps()
+        with pytest.raises(ValueError, match="incompatible"):
+            other.filter_unseen(df)
         with pytest.raises(ValueError, match="cuckoo prefilter was removed"):
             SeenSet(
                 spark, root, n_shards=2, bits_per_shard=1 << 12,
@@ -306,7 +368,6 @@ def test_sidecar_format_stamp_guards_incompatible_state(spark):
         import os
 
         os.remove(seen._format_file())
-        seen._bitmaps = None
         with pytest.raises(ValueError, match="unstamped"):
             seen.load_bitmaps()
     finally:
@@ -390,7 +451,6 @@ def test_double_add_retry_semantics(spark):
         seen.add(df, round_no=0)
         fill1 = [st["fill"] for st in seen.sidecar_stats()]
         seen.add(df, round_no=1)  # the "retry": identical delta
-        seen._bitmaps = None
         probe = spark.createDataFrame(
             [(s,) for s in surts] + [("com,fresh)/x",)], "surt string"
         )
@@ -529,6 +589,51 @@ def _engine_threads():
     ]
 
 
+def _rdd_blocks(spark):
+    """RDDs holding blocks in the block manager (checkpoints included)."""
+    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
+def _assert_replays_oracle(eng, spec, seeds):
+    from common_crawl___autumn_2025_spark.crawl import oracle
+
+    want = oracle.crawl(spec, seeds)
+    log, seen, matches = _crawl_state(eng)
+    assert log == sorted((r[0], r[1], r[2], r[3], r[7]) for r in want.fetch_log)
+    assert seen == sorted(want.seen)
+    assert matches == sorted(
+        (sid, m[1], m[2], m[3]) for sid, m in want.matches.items()
+    )
+
+
+@pytest.mark.parametrize(
+    "limits",
+    [
+        {},
+        {"matched_isin_limit": 1},
+        {"matched_isin_limit": 0, "matched_mirror_limit": 0},
+    ],
+    ids=["isin", "broadcast_mirror", "matches_table"],
+)
+def test_crawl_frees_its_checkpoints(spark, deep_spec, limits):
+    """A finished crawl leaves no checkpoint blocks behind in any
+    matched-seed regime. The table regime also pins the lineage: its
+    plans must read no fetch older than the previous round's, or the
+    freed checkpoints fail the next commit."""
+    seeds = syn.seed_urls(deep_spec.web, 40)
+    root = tempfile.mkdtemp(prefix="ck_blocks_")
+    try:
+        eng = CrawlEngine(spark, deep_spec, root, partitions=2)
+        for name, value in limits.items():
+            setattr(eng, name, value)
+        before = _rdd_blocks(spark)
+        eng.run(seeds)
+        assert _rdd_blocks(spark) == before
+        _assert_replays_oracle(eng, deep_spec, seeds)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def _slow_seen_add(monkeypatch, delay_s=1.5):
     """Delay every ``SeenSet.add`` — a large round's append — so the
     round's other jobs finish (or fail) while it is still running."""
@@ -550,7 +655,6 @@ def test_failed_fetch_leaves_no_seen_writer(spark, deep_spec, monkeypatch):
     from the resumed crawl and duplicate seen rows."""
     from urllib.parse import urlsplit
 
-    from common_crawl___autumn_2025_spark.crawl import oracle
     from common_crawl___autumn_2025_spark.crawl.fetchers import SyntheticFetcher
 
     class HomepagesOnly(SyntheticFetcher):
@@ -567,21 +671,18 @@ def test_failed_fetch_leaves_no_seen_writer(spark, deep_spec, monkeypatch):
             spark, deep_spec, root, partitions=2,
             fetcher=HomepagesOnly(deep_spec.web),
         )
+        before = _rdd_blocks(spark)
         with pytest.raises(Exception, match="injected fetch failure"):
             failing.run(seeds)
         assert _engine_threads() == []
+        assert _rdd_blocks(spark) == before
         assert failing.store.latest_round() == 0
 
         resumed = CrawlEngine(spark, deep_spec, root, partitions=2)
         resumed.run(seeds, resume=True)
-        want = oracle.crawl(deep_spec, seeds)
-        log, seen, matches = _crawl_state(resumed)
-        assert log == sorted((r[0], r[1], r[2], r[3], r[7]) for r in want.fetch_log)
-        assert seen == sorted(want.seen)
-        assert matches == sorted(
-            (sid, m[1], m[2], m[3]) for sid, m in want.matches.items()
-        )
-        assert resumed.seen.exact_df().count() == len(seen)
+        assert _rdd_blocks(spark) == before
+        _assert_replays_oracle(resumed, deep_spec, seeds)
+        assert resumed.seen.exact_df().count() == len(_crawl_state(resumed)[1])
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -612,14 +713,17 @@ def test_failed_commit_resumes_exactly(spark, deep_spec, monkeypatch):
         monkeypatch.setattr(CheckpointStore, "commit", commit_fails_once)
         _slow_seen_add(monkeypatch)
         failing = CrawlEngine(spark, deep_spec, root_fail, partitions=2)
+        before = _rdd_blocks(spark)
         with pytest.raises(RuntimeError, match="injected commit failure"):
             failing.run(seeds)
         assert failed == [1]
         assert _engine_threads() == []
+        assert _rdd_blocks(spark) == before
         assert failing.store.latest_round() == 0
 
         resumed = CrawlEngine(spark, deep_spec, root_fail, partitions=2)
         resumed.run(seeds, resume=True)
+        assert _rdd_blocks(spark) == before
         assert _crawl_state(resumed) == _crawl_state(full)
         assert resumed.seen.exact_df().count() == len(_crawl_state(full)[1])
     finally:

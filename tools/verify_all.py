@@ -5,6 +5,9 @@ rests on, in dependency order:
 2. driver-contract mirror at sf0.01 (every queries() entry vs DuckDB)
 3. optionally the same at sf0.1 (value stability at 10x) with --deep
 4. bench smoke (one JSON line) at sf0.01 unless --sf given
+5. one short traced run of each repo benchmark workload
+   (``perfbench/run.py``); its last line must report ``failed: 0``
+   and ``correct: true``
 
 Exit code 0 only if every stage passes.
 
@@ -14,6 +17,7 @@ Usage: python tools/verify_all.py [--deep] [--sf /root/testdata/sf0.1]
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import subprocess
 import sys
@@ -28,6 +32,25 @@ def run(label: str, cmd: list[str], env: dict | None = None) -> bool:
     rc = subprocess.run(cmd, cwd=REPO, env=e).returncode
     print(f"== {label}: {'OK' if rc == 0 else f'FAILED rc={rc}'}", flush=True)
     return rc == 0
+
+
+def run_perfbench(py: str, workload: str) -> bool:
+    cmd = [py, "perfbench/run.py", "--workload", workload, "--seed", "1",
+           "--seconds", "1", "--trace", "1"]
+    label = f"perfbench {workload}"
+    print(f"== {label}: {' '.join(cmd)}", flush=True)
+    proc = subprocess.run(cmd, cwd=REPO, stdout=subprocess.PIPE, text=True)
+    lines = proc.stdout.strip().splitlines()
+    try:
+        last = json.loads(lines[-1])
+    except (IndexError, ValueError):
+        last = {}
+    ok = (proc.returncode == 0 and last.get("failed") == 0
+          and last.get("correct") is True)
+    summary = {k: last.get(k) for k in ("correct", "attempted", "failed")}
+    print(f"== {label}: {'OK' if ok else 'FAILED'} "
+          f"rc={proc.returncode} {summary}", flush=True)
+    return ok
 
 
 def main() -> int:
@@ -45,6 +68,8 @@ def main() -> int:
         ok &= run("oracle sf0.1", [py, "tools/check_oracle.py",
                                    "/root/testdata/sf0.1"])
     ok &= run("bench", [py, "bench.py"], env={"SPARK_GRAFT_SF_DIR": args.sf})
+    for workload in ("crawl_resume", "catalog"):
+        ok &= run_perfbench(py, workload)
     print("== ALL OK" if ok else "== FAILURES ABOVE")
     return 0 if ok else 1
 
