@@ -61,23 +61,29 @@ def _dir_metrics(path: str) -> list[dict]:
         return list(pool.map(one, paths))
 
 
+def posix_root(root: str) -> str:
+    """The POSIX path a checkpoint or seen-set root names.
+
+    Metadata/bitmap IO uses plain POSIX calls (os, pyarrow local
+    reads, np.load in executor tasks), so the root must be a
+    local-scheme path on storage shared by driver and executors (NFS
+    on a cluster). Any other URI would silently split the store: Spark
+    writes would go to its scheme while manifests and Bloom sidecars
+    land in a bogus local "hdfs:" (or "file:") directory, so a
+    ``file:`` URI in any form becomes its path."""
+    parts = urlsplit(root)
+    if parts.scheme not in ("", "file"):
+        raise ValueError(
+            f"checkpoint and seen-set roots must be a POSIX path shared "
+            f"by driver and executors (got scheme {parts.scheme!r}); "
+            f"route it through a mounted filesystem instead"
+        )
+    return parts.path if parts.scheme else root
+
+
 class CheckpointStore:
     def __init__(self, spark: SparkSession, root: str):
-        # Metadata/bitmap IO uses plain POSIX calls (os, pyarrow local
-        # reads, np.load in executor tasks), so the root must be a
-        # local-scheme path on storage shared by driver and executors
-        # (NFS on a cluster). Any other URI would silently split the
-        # store: Spark writes would go to its scheme while manifests and
-        # Bloom sidecars land in a bogus local "hdfs:" (or "file:")
-        # directory, so a ``file:`` URI in any form becomes its path.
-        parts = urlsplit(root)
-        if parts.scheme not in ("", "file"):
-            raise ValueError(
-                f"checkpoint root must be a POSIX path shared by driver "
-                f"and executors (got scheme {parts.scheme!r}); route it "
-                f"through a mounted filesystem instead"
-            )
-        root = parts.path if parts.scheme else root
+        root = posix_root(root)
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)

@@ -60,6 +60,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .checkpoints import posix_root
 from .hashing import bloom_positions_vec, h1_from_int64, xxh64_str
 
 SEEN_SCHEMA = "shard int, surt string, first_round int"
@@ -178,11 +179,11 @@ class SeenSet:
                 "supported (the cuckoo prefilter was removed)"
             )
         self.spark = spark
-        self.path = path
+        self.path = posix_root(path)
         self.n_shards = n_shards
         self.bits = bits_per_shard
         self.k = n_hashes
-        self._bloom_dir = os.path.join(path, "bloom")
+        self._bloom_dir = os.path.join(self.path, "bloom")
         os.makedirs(self._bloom_dir, exist_ok=True)
 
     # -- sidecar format stamp ---------------------------------------------

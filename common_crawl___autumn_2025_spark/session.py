@@ -15,13 +15,28 @@ configuration:
 - local sessions fork Python workers from ``worker_daemon``, which
   spares each task a re-read of ``pyspark.zip`` (~250 ms of CPU on
   CPython 3.11/3.12); a ``--py-files`` package joins ``sys.path`` only
-  after the daemon starts, so cluster sessions keep pyspark's daemon.
+  after the daemon starts, so cluster sessions keep pyspark's daemon,
+- local sessions start the driver JVM from a class-data-sharing archive
+  (JEP 350) that the first warmed session dumps into the user's cache,
+  which spares each later start Spark's class loading
+  (``spark.engine.classArchive``: used/dumped/rejected/off).
 """
 
 from __future__ import annotations
 
+import contextlib
+import errno
+import glob
+import hashlib
 import os
+import re
+import resource
+import shutil
+import subprocess
 
+import pyspark
+from py4j.protocol import Py4JError
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
@@ -73,14 +88,165 @@ def get_spark(
         builder = builder.master(f"local[{cores}]").config(
             "spark.python.daemon.module", f"{__package__}.worker_daemon"
         )
+    # the class archive applies only to a JVM this call launches; a
+    # caller's extraJavaOptions add to defaultJavaOptions. Only a warmed
+    # session dumps, so the archive holds what a warm start loads.
+    warm = os.environ.get("SPARK_GRAFT_WARM_SESSION", "1") != "0"
+    launching = pyspark.SparkContext._gateway is None
+    stem = _archive_stem(extra_conf or {}) if launching else None
+    archive = stem and _find_archive(stem)
+    dump = bool(stem and warm and not archive)
+    if archive or dump:
+        flag = f"SharedArchiveFile={archive}" if archive else "+RecordDynamicDumpInfo"
+        opts = f"-Xlog:cds*=off -XX:{flag}"
+        builder = builder.config("spark.driver.defaultJavaOptions", opts)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    # the conf dir joins the launched JVM's classpath, and JDK 17 cannot
+    # dump with a non-empty directory there: launch with an empty one
+    conf_dir = os.environ.get("SPARK_CONF_DIR")
+    if archive or dump:
+        os.environ["SPARK_CONF_DIR"] = os.path.join(os.path.dirname(stem), "conf")
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if conf_dir is None:
+            os.environ.pop("SPARK_CONF_DIR", None)
+        else:
+            os.environ["SPARK_CONF_DIR"] = conf_dir
     spark.sparkContext.setLogLevel("WARN")
     _add_worker_path(spark.sparkContext)
-    if os.environ.get("SPARK_GRAFT_WARM_SESSION", "1") != "0":
+    if warm:
         _warm_session(spark, cores)
+    if launching:
+        state = "off"
+        if archive:
+            state = "used" if _mapped(spark, archive) else "rejected"
+        elif dump and _dump_archive(spark, stem):
+            state = "dumped"
+        spark.conf.set("spark.engine.classArchive", state)
     return spark
+
+
+# driver settings that change the classes the JVM boots with or the
+# archives it can map; a session with them starts without the archive
+_CDS_BLOCKERS = {"spark.driver.defaultJavaOptions", "spark.driver.extraClassPath"}
+_DUMP_ROOM = 256 << 20  # bytes a dump may take; the archive is ~111 MB
+
+
+def _archive_stem(conf: dict, env=os.environ) -> str | None:
+    """The cache path, minus ``.<size>.jsa``, of the class archive for
+    this JDK, pyspark and jar set; None (CDS off) on a cluster, when the
+    conf dir holds real files, when ``conf`` sets the driver classpath
+    or default JVM options, or for a heap of 31g or more (without
+    compressed oops the JVM refuses an archive dumped with them)."""
+    mem = conf.get("spark.driver.memory", env.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", mem.strip().lower())
+    if not m or int(m[1]) << 10 * "kmgt".index(m[2] or "m") >= 31 << 20:
+        return None
+    if env.get("SPARK_GRAFT_NO_LOCAL_MASTER") or _CDS_BLOCKERS & conf.keys():
+        return None
+    home = _find_spark_home()
+    conf_dir = env.get("SPARK_CONF_DIR") or os.path.join(home, "conf")
+    if os.path.isdir(conf_dir) and any(
+        not n.endswith(".template") for n in os.listdir(conf_dir)
+    ):
+        return None
+    base = env.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    cache = os.path.join(base, "common_crawl_spark", "cds")
+    jhome = env.get("JAVA_HOME")  # spark-class runs $JAVA_HOME/bin/java
+    java = os.path.join(jhome, "bin", "java") if jhome else shutil.which("java")
+    try:
+        java = os.path.realpath(java)
+        jdk = os.stat(os.path.join(os.path.dirname(java), "..", "lib", "modules"))
+        # "warmed": the archive holds what a warmed session loads
+        key = ["warmed", java, jdk.st_size, jdk.st_mtime_ns, pyspark.__version__]
+        jars = sorted(os.scandir(os.path.join(home, "jars")), key=lambda e: e.name)
+        key += [(j.name, j.stat().st_size, j.stat().st_mtime_ns) for j in jars]
+        os.makedirs(os.path.join(cache, "conf"), exist_ok=True)
+    except (OSError, TypeError):  # TypeError: no java on PATH
+        return None
+    return os.path.join(cache, hashlib.sha256(repr(key).encode()).hexdigest()[:16])
+
+
+def _find_archive(stem: str) -> str | None:
+    """A published archive whose size matches its name; others are
+    deleted, as a truncated archive kills the JVM with SIGBUS."""
+    for path in glob.glob(glob.escape(stem) + ".*.jsa"):
+        try:
+            if os.path.getsize(path) == int(path[len(stem) + 1 : -len(".jsa")]):
+                return path
+            os.remove(path)
+        except (OSError, ValueError):
+            pass
+    return None
+
+
+def _mapped(spark, archive: str) -> bool:
+    """Whether the driver JVM mapped ``archive`` (it starts without one
+    it refuses). A refused archive is deleted, so the next session
+    dumps one that maps."""
+    pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    real = os.path.realpath(archive)  # maps name files by their real path
+    try:
+        with open(f"/proc/{pid}/maps") as maps:
+            found = any(line.rstrip().endswith(real) for line in maps)
+    except OSError:  # no /proc to tell
+        return True
+    if not found:
+        with contextlib.suppress(OSError):
+            os.remove(archive)
+    return found
+
+
+def _room_for_dump(path: str) -> None:
+    """Raise OSError unless ``path`` can grow to ``_DUMP_ROOM`` bytes.
+    JDK 17 ends the whole JVM when it cannot write a dump, so the file
+    size limit is checked and the space reserved first (the reservation
+    fails with ENOSPC, EDQUOT or EFBIG where a write would)."""
+    limit = resource.getrlimit(resource.RLIMIT_FSIZE)[0]
+    if limit != resource.RLIM_INFINITY and limit < _DUMP_ROOM:
+        raise OSError(errno.EFBIG, "file size limit below a dump", path)
+    fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
+    try:
+        os.posix_fallocate(fd, 0, _DUMP_ROOM)
+        os.ftruncate(fd, 0)
+    finally:
+        os.close(fd)
+
+
+def _dump_archive(spark, stem: str) -> bool:
+    """Dump the driver JVM's loaded classes with ``jcmd`` and publish
+    them by an atomic rename, size in the name. The cache then holds
+    this archive only: older keys' archives and abandoned dumps go."""
+    tmp = f"{stem}.jsa.tmp.{os.getpid()}"
+    try:
+        _room_for_dump(tmp)
+        jvm, system = spark._jvm, spark._jvm.java.lang.System
+        jdk = system.getProperty("java.home")
+        pid = str(jvm.java.lang.ProcessHandle.current().pid())
+        out = system.out  # the dump prints its path there
+        system.setOut(jvm.java.io.PrintStream(jvm.java.io.OutputStream.nullOutputStream()))
+        try:
+            subprocess.run(
+                [os.path.join(jdk, "bin", "jcmd"), pid, "VM.cds", "dynamic_dump", tmp],
+                capture_output=True, timeout=120, check=True,
+            )
+        finally:
+            system.setOut(out)
+        size = os.path.getsize(tmp)  # jcmd exits 0 even when a dump fails
+        if size and not _find_archive(stem):  # a concurrent session may have won
+            os.replace(tmp, f"{stem}.{size}.jsa")
+            for old in glob.glob(os.path.join(glob.escape(os.path.dirname(stem)), "*.jsa*")):
+                if old != f"{stem}.{size}.jsa":
+                    with contextlib.suppress(OSError):
+                        os.remove(old)
+        return bool(size)
+    except (OSError, subprocess.SubprocessError, Py4JError):
+        return False
+    finally:
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
 
 
 def _add_worker_path(sc) -> None:

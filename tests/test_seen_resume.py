@@ -297,6 +297,28 @@ def test_checkpoint_store_accepts_file_uri(spark, tmp_path, monkeypatch):
     assert os.listdir(cwd) == []
 
 
+def test_seen_set_file_uri_keeps_one_store(spark, tmp_path, monkeypatch):
+    """A ``file:`` seen-set path is its path: the exact table and the
+    Bloom sidecars both land under it, and nothing named "file:" is
+    created under the working directory. Other schemes are refused,
+    as for checkpoint roots."""
+    from common_crawl___autumn_2025_spark.crawl.seen import SeenSet
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    seen = SeenSet(spark, "file:" + str(tmp_path / "s"), n_shards=2, bits_per_shard=1 << 12)
+    seen.add(spark.createDataFrame([("com,a)/",), ("com,b)/",)], "surt string"), 0)
+    fresh = seen.filter_unseen(
+        spark.createDataFrame([("com,a)/",), ("com,c)/",)], "surt string")
+    )
+    assert sorted(r.surt for r in fresh.collect()) == ["com,c)/"]
+    assert os.listdir(cwd) == []
+    assert sorted(os.listdir(tmp_path / "s")) == ["bloom", "exact"]
+    with pytest.raises(ValueError, match="POSIX path"):
+        SeenSet(spark, "hdfs://x/p")
+
+
 def test_lineage_terminates_on_recommit(spark, small_spec, tmp_path):
     """Recommitting round 0 over an existing root must not create a
     parent cycle (parent derives from the round number now)."""
@@ -590,8 +612,11 @@ def _engine_threads():
 
 
 def _rdd_blocks(spark):
-    """RDDs holding blocks in the block manager (checkpoints included)."""
-    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+    """Ids of the RDDs holding blocks in the block manager (checkpoints
+    included). A crawl leaks when an id appears that was not there
+    before; ids may also go, as the context cleaner frees an earlier
+    test's blocks at whatever JVM GC lands during the crawl."""
+    return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
 def _assert_replays_oracle(eng, spec, seeds):
@@ -628,7 +653,7 @@ def test_crawl_frees_its_checkpoints(spark, deep_spec, limits):
             setattr(eng, name, value)
         before = _rdd_blocks(spark)
         eng.run(seeds)
-        assert _rdd_blocks(spark) == before
+        assert _rdd_blocks(spark) <= before
         _assert_replays_oracle(eng, deep_spec, seeds)
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -675,12 +700,12 @@ def test_failed_fetch_leaves_no_seen_writer(spark, deep_spec, monkeypatch):
         with pytest.raises(Exception, match="injected fetch failure"):
             failing.run(seeds)
         assert _engine_threads() == []
-        assert _rdd_blocks(spark) == before
+        assert _rdd_blocks(spark) <= before
         assert failing.store.latest_round() == 0
 
         resumed = CrawlEngine(spark, deep_spec, root, partitions=2)
         resumed.run(seeds, resume=True)
-        assert _rdd_blocks(spark) == before
+        assert _rdd_blocks(spark) <= before
         _assert_replays_oracle(resumed, deep_spec, seeds)
         assert resumed.seen.exact_df().count() == len(_crawl_state(resumed)[1])
     finally:
@@ -718,12 +743,12 @@ def test_failed_commit_resumes_exactly(spark, deep_spec, monkeypatch):
             failing.run(seeds)
         assert failed == [1]
         assert _engine_threads() == []
-        assert _rdd_blocks(spark) == before
+        assert _rdd_blocks(spark) <= before
         assert failing.store.latest_round() == 0
 
         resumed = CrawlEngine(spark, deep_spec, root_fail, partitions=2)
         resumed.run(seeds, resume=True)
-        assert _rdd_blocks(spark) == before
+        assert _rdd_blocks(spark) <= before
         assert _crawl_state(resumed) == _crawl_state(full)
         assert resumed.seen.exact_df().count() == len(_crawl_state(full)[1])
     finally:

@@ -7,7 +7,9 @@ rests on, in dependency order:
 4. bench smoke (one JSON line) at sf0.01 unless --sf given
 5. one short traced run of each repo benchmark workload
    (``perfbench/run.py``); its last line must report ``failed: 0``
-   and ``correct: true``
+   and ``correct: true``. Both runs share a fresh, temporary
+   ``XDG_CACHE_HOME``, so the first dumps the driver JVM's class
+   archive and the second starts from it
 
 Exit code 0 only if every stage passes.
 
@@ -21,6 +23,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -34,12 +37,13 @@ def run(label: str, cmd: list[str], env: dict | None = None) -> bool:
     return rc == 0
 
 
-def run_perfbench(py: str, workload: str) -> bool:
+def run_perfbench(py: str, workload: str, cache: str) -> bool:
     cmd = [py, "perfbench/run.py", "--workload", workload, "--seed", "1",
            "--seconds", "1", "--trace", "1"]
     label = f"perfbench {workload}"
     print(f"== {label}: {' '.join(cmd)}", flush=True)
-    proc = subprocess.run(cmd, cwd=REPO, stdout=subprocess.PIPE, text=True)
+    env = dict(os.environ, XDG_CACHE_HOME=cache)
+    proc = subprocess.run(cmd, cwd=REPO, env=env, stdout=subprocess.PIPE, text=True)
     lines = proc.stdout.strip().splitlines()
     try:
         last = json.loads(lines[-1])
@@ -68,8 +72,9 @@ def main() -> int:
         ok &= run("oracle sf0.1", [py, "tools/check_oracle.py",
                                    "/root/testdata/sf0.1"])
     ok &= run("bench", [py, "bench.py"], env={"SPARK_GRAFT_SF_DIR": args.sf})
-    for workload in ("crawl_resume", "catalog"):
-        ok &= run_perfbench(py, workload)
+    with tempfile.TemporaryDirectory(prefix="verify_cds_") as cache:
+        for workload in ("crawl_resume", "catalog"):
+            ok &= run_perfbench(py, workload, cache)
     print("== ALL OK" if ok else "== FAILURES ABOVE")
     return 0 if ok else 1
 
