@@ -214,8 +214,11 @@ class CheckpointStore:
         with open(os.path.join(self._round_dir(round_no), "manifest.json")) as f:
             return json.load(f)
 
-    def read_table(self, round_no: int, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._table_dir(round_no, name))
+    def read_table(self, round_no: int, name: str, schema: str | None = None) -> DataFrame:
+        """A committed table; a ``schema`` spares the read Spark's
+        footer-inference job."""
+        reader = self.spark.read.schema(schema) if schema else self.spark.read
+        return reader.parquet(self._table_dir(round_no, name))
 
     def _table_dir(self, round_no: int, name: str) -> str:
         """Physical directory of a table — resolved through the

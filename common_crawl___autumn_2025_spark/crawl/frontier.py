@@ -795,7 +795,7 @@ class CrawlEngine:
         paths = self.store.delta_table_paths("matches", upto)
         if not paths:
             return self.spark.createDataFrame([], MATCH_SCHEMA)
-        return self.spark.read.parquet(*paths)
+        return self.spark.read.schema(MATCH_SCHEMA).parquet(*paths)
 
     # -- pipelined commit ----------------------------------------------------
 
@@ -847,7 +847,7 @@ class CrawlEngine:
                     raise ValueError(
                         "checkpoint config mismatch — refusing to resume"
                     )
-                frontier = self.store.read_table(latest, "frontier")
+                frontier = self.store.read_table(latest, "frontier", FRONTIER_SCHEMA)
                 matches = self.read_matches_cum(latest)
                 # only rebuild the driver mirror while it is small
                 # (manifest cumulative counter — no job); a resume

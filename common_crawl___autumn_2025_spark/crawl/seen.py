@@ -240,7 +240,9 @@ class SeenSet:
 
     def exact_df(self) -> DataFrame:
         if self._has_exact():
-            return self.spark.read.parquet(self.exact_path)
+            # the order Spark infers: data column, then partition columns
+            schema = "surt string, shard int, first_round int"
+            return self.spark.read.schema(schema).parquet(self.exact_path)
         return self.spark.createDataFrame([], SEEN_SCHEMA)
 
     def has_state(self) -> bool:
@@ -406,7 +408,8 @@ class SeenSet:
         bloom_dir = self._bloom_dir
         rows = rows.withColumn("__h1", h1_expr("surt"))
 
-        def build_bitmap(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        # unannotated: partial type hints make every applyInPandas warn
+        def build_bitmap(key, pdf):
             shard = int(key[0])
             h1 = h1_from_int64(pdf["__h1"].to_numpy())
             publish_sidecar(bloom_dir, shard, bloom_bitmap(h1, bits, k), merge=False)

@@ -17,9 +17,12 @@ configuration:
   CPython 3.11/3.12); a ``--py-files`` package joins ``sys.path`` only
   after the daemon starts, so cluster sessions keep pyspark's daemon,
 - local sessions start the driver JVM from a class-data-sharing archive
-  (JEP 350) that the first warmed session dumps into the user's cache,
-  which spares each later start Spark's class loading
-  (``spark.engine.classArchive``: used/dumped/rejected/off).
+  (JEP 350), which spares each start Spark's class loading
+  (``spark.engine.classArchive``: used/dumped/rejected/off). Only the
+  session that finds no archive runs a synthetic warm-up, then dumps
+  the archive into the user's cache; every other session returns
+  right after ``getOrCreate``,
+- a 1024-entry generated-code cache, so warm crawls stop recompiling.
 """
 
 from __future__ import annotations
@@ -81,6 +84,9 @@ def get_spark(
         # parquet scan sizing: at 100 TB this is the lever that keeps
         # input splits ~128MB regardless of file layout
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # static: a crawl needs ~120 generated-code entries (one per body
+        # per class loader), which the default 100 would evict in a loop
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     # Only force a master when none is configured (spark-submit on a
     # cluster supplies its own).
@@ -89,14 +95,11 @@ def get_spark(
             "spark.python.daemon.module", f"{__package__}.worker_daemon"
         )
     # the class archive applies only to a JVM this call launches; a
-    # caller's extraJavaOptions add to defaultJavaOptions. Only a warmed
-    # session dumps, so the archive holds what a warm start loads.
-    warm = os.environ.get("SPARK_GRAFT_WARM_SESSION", "1") != "0"
+    # caller's extraJavaOptions add to defaultJavaOptions
     launching = pyspark.SparkContext._gateway is None
     stem = _archive_stem(extra_conf or {}) if launching else None
     archive = stem and _find_archive(stem)
-    dump = bool(stem and warm and not archive)
-    if archive or dump:
+    if stem:
         flag = f"SharedArchiveFile={archive}" if archive else "+RecordDynamicDumpInfo"
         opts = f"-Xlog:cds*=off -XX:{flag}"
         builder = builder.config("spark.driver.defaultJavaOptions", opts)
@@ -105,7 +108,7 @@ def get_spark(
     # the conf dir joins the launched JVM's classpath, and JDK 17 cannot
     # dump with a non-empty directory there: launch with an empty one
     conf_dir = os.environ.get("SPARK_CONF_DIR")
-    if archive or dump:
+    if stem:
         os.environ["SPARK_CONF_DIR"] = os.path.join(os.path.dirname(stem), "conf")
     try:
         spark = builder.getOrCreate()
@@ -116,14 +119,15 @@ def get_spark(
             os.environ["SPARK_CONF_DIR"] = conf_dir
     spark.sparkContext.setLogLevel("WARN")
     _add_worker_path(spark.sparkContext)
-    if warm:
-        _warm_session(spark, cores)
     if launching:
         state = "off"
         if archive:
             state = "used" if _mapped(spark, archive) else "rejected"
-        elif dump and _dump_archive(spark, stem):
-            state = "dumped"
+        elif stem:
+            # only the dumping session warms up, so the archive holds
+            # what a warm start loads
+            _warm_session(spark, cores)
+            state = "dumped" if _dump_archive(spark, stem) else "off"
         spark.conf.set("spark.engine.classArchive", state)
     return spark
 
@@ -260,31 +264,18 @@ def _add_worker_path(sc) -> None:
         sc.environment["PYTHONPATH"] = os.pathsep.join(parts + [_PKG_PARENT])
 
 
-_WARMED: set[int] = set()
-
-
 def _warm_session(spark, cores: int) -> None:
-    """One bounded SYNTHETIC warm-up pass per session (r7).
-
-    Short queries measured on a fresh JVM pay first-invocation costs
-    that have nothing to do with their plans: starting the Python
-    worker daemon and forking its pool (one worker per core, each
-    importing pandas/pyarrow/numpy on its first Arrow task), opening
-    Arrow channels, and tiering the shuffle/window/join/codegen
-    machinery from interpreter to C2 (measured: d03 runs 10.9/6.3/
-    4.0/2.4 s on consecutive invocations in a fresh session).
+    """One bounded SYNTHETIC pass, run only by the session that dumps
+    the class archive, so the archive holds the classes a first real
+    operation loads (an archive dumped without it made every later cold
+    crawl 0.1-1.2 s slower). A session that finds the archive skips it:
+    there it saved no measurable time.
 
     This pass touches NO input data and caches NOTHING an actual
     query reads — it drives a deterministic in-memory range through
     the hot machinery (mapInPandas+Arrow on every core, broadcast and
     shuffle joins, a ranking window, partial aggregation, string
-    expressions, a sort) and discards the result via the noop sink.
-    Disable with SPARK_GRAFT_WARM_SESSION=0."""
-    sc = spark.sparkContext
-    key = id(sc)
-    if key in _WARMED:
-        return
-    _WARMED.add(key)
+    expressions, a sort) and discards the result via the noop sink."""
     import pandas as pd  # noqa: PLC0415 — keep module import light
 
     from pyspark.sql import Window

@@ -754,3 +754,54 @@ def test_failed_commit_resumes_exactly(spark, deep_spec, monkeypatch):
     finally:
         shutil.rmtree(root_full, ignore_errors=True)
         shutil.rmtree(root_fail, ignore_errors=True)
+
+
+def _job_count(spark) -> int:
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return max(ids, default=-1) + 1
+
+
+def test_resume_reads_run_no_schema_job(spark, small_spec, tmp_path):
+    """The three tables a resume reads (the latest frontier, the
+    cumulative matches, the exact seen rows) are read with their
+    schemas, so no read runs Spark's footer-inference job, and each
+    schema is the one Spark would infer, column order included."""
+    from common_crawl___autumn_2025_spark.crawl.frontier import FRONTIER_SCHEMA
+
+    eng = CrawlEngine(spark, small_spec, str(tmp_path), partitions=2)
+    eng.run(syn.seed_urls(small_spec.web, 10))
+    latest = eng.store.latest_round()
+    reads = [
+        (
+            lambda: eng.store.read_table(latest, "frontier", FRONTIER_SCHEMA),
+            [eng.store._table_dir(latest, "frontier")],
+        ),
+        (
+            lambda: eng.read_matches_cum(latest),
+            eng.store.delta_table_paths("matches", latest),
+        ),
+        (eng.seen.exact_df, [eng.seen.exact_path]),
+    ]
+    for read, paths in reads:
+        before = _job_count(spark)
+        schema = read().schema
+        assert _job_count(spark) == before
+        inferred = spark.read.parquet(*paths)
+        assert _job_count(spark) > before  # the job a schema spares
+        assert schema == inferred.schema
+    assert eng.read_matches_cum(latest).count() > 0
+
+
+def test_rollback_emits_no_user_warning(spark, tmp_path):
+    """The rollback rebuild's grouped pandas function carries no partial
+    type hints, which made every ``applyInPandas`` warn on stderr."""
+    import warnings
+
+    seen = SeenSet(spark, str(tmp_path), n_shards=2, bits_per_shard=1 << 12)
+    seen.add(spark.createDataFrame([("a)/",), ("b)/",)], "surt string"), 0)
+    seen.add(spark.createDataFrame([("c)/",)], "surt string"), 1)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        seen.rollback(0)
+    assert [w for w in caught if issubclass(w.category, UserWarning)] == []
+    assert {r.surt for r in seen.exact_df().collect()} == {"a)/", "b)/"}

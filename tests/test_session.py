@@ -17,6 +17,8 @@ from common_crawl___autumn_2025_spark.crawl.frontier import seeds_frontier
 from common_crawl___autumn_2025_spark.session import get_spark
 
 spark = get_spark("any_cwd", cores=2, shuffle_partitions=2)
+print("ARCHIVE", spark.conf.get("spark.engine.classArchive"))
+print("JOBS", len(spark.sparkContext.statusTracker().getJobIdsForGroup(None)))
 n = seeds_frontier(spark, ["http://a.example.com/", "http://b.example.org/x"]).count()
 print("COUNT", n)
 
@@ -41,9 +43,12 @@ def test_python_workers_import_engine_from_any_cwd(tmp_path):
     starts elsewhere, so Python workers can import the engine only
     through the path get_spark adds for them. The same path lets the
     JVM start the engine's worker daemon, whose stamp check every
-    worker then runs under."""
+    worker then runs under. With the class archive off (the cache path
+    is a file) the session runs no job before it returns."""
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("")
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["SPARK_GRAFT_WARM_SESSION"] = "0"
+    env["XDG_CACHE_HOME"] = str(blocker)
     env.setdefault("PYSPARK_PYTHON", sys.executable)
     proc = subprocess.run(
         [sys.executable, "-c", _SCRIPT.format(repo=REPO)],
@@ -54,6 +59,7 @@ def test_python_workers_import_engine_from_any_cwd(tmp_path):
         timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "ARCHIVE off\nJOBS 0\n" in proc.stdout
     assert "COUNT 2" in proc.stdout
     assert "DAEMON common_crawl___autumn_2025_spark.worker_daemon\n" in proc.stdout
 
@@ -82,6 +88,10 @@ from common_crawl___autumn_2025_spark.session import get_spark
 
 spark = get_spark("class_archive", cores=2, shuffle_partitions=2,
                   extra_conf={{"spark.driver.extraJavaOptions": "-Dengine.probe=1"}})
+jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+desc = [jobs.apply(i).description() for i in range(jobs.size())]
+print("JOBS", len(desc))
+print("WARMUP", any(d.isDefined() and d.get() == "session warmup (synthetic)" for d in desc))
 n = spark.range(0, 64, 1, 2).mapInPandas(lambda it: it, "id long").count()
 print("ARCHIVE", spark.conf.get("spark.engine.classArchive"))
 print("PROBE", spark._jvm.java.lang.System.getProperty("engine.probe"))
@@ -91,26 +101,30 @@ spark.stop()
 
 
 def test_class_archive_dumped_used_rebuilt_and_rejected(tmp_path):
-    """Local sessions against a fresh cache. A session without the
-    warm-up publishes nothing (its archive would miss what a warm start
-    loads); a warmed one dumps the driver JVM's class archive; the next
-    starts from it; one that finds it truncated (which would SIGBUS the
-    JVM if passed) drops it and dumps a complete one again; and one
-    that finds a file the JVM refuses reports so and deletes it. The
+    """Local sessions against a fresh cache. The first runs the
+    synthetic warm-up and then dumps the driver JVM's class archive;
+    the next starts from it and runs no job before it returns; one that
+    finds it truncated (which would SIGBUS the JVM if passed) drops it,
+    warms up and dumps a complete one again; and one that finds a file
+    the JVM refuses reports so and deletes it. A session with CDS off
+    (a real file in the conf dir) neither warms up nor dumps. The
     caller's extraJavaOptions reach the JVM next to the engine's flags."""
     cwd, conf, cache = tmp_path / "cwd", tmp_path / "conf", tmp_path / "cache"
     cwd.mkdir()
     conf.mkdir()
+    real = tmp_path / "real_conf"
+    real.mkdir()
+    (real / "spark-defaults.conf").write_text("spark.ui.enabled false\n")
     base = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     base.update(SPARK_CONF_DIR=str(conf), XDG_CACHE_HOME=str(cache))
     base.setdefault("PYSPARK_PYTHON", sys.executable)
     cds = cache / "common_crawl_spark" / "cds"
 
-    def session(warm: bool) -> str:
+    def session(**env) -> str:
         proc = subprocess.run(
             [sys.executable, "-c", _ARCHIVE_SCRIPT.format(repo=REPO)],
             cwd=str(cwd),
-            env=dict(base, SPARK_GRAFT_WARM_SESSION="1" if warm else "0"),
+            env=dict(base, **env),
             capture_output=True,
             text=True,
             timeout=300,
@@ -130,22 +144,26 @@ def test_class_archive_dumped_used_rebuilt_and_rejected(tmp_path):
             assert f.stat().st_size == int(f.name.split(".")[1])
         return found
 
-    assert "ARCHIVE off\n" in session(warm=False)
-    assert archives() == []
-    assert "ARCHIVE dumped\n" in session(warm=True)
+    out = session(SPARK_CONF_DIR=str(real))
+    assert "ARCHIVE off\n" in out and "JOBS 0\n" in out
+    assert not cds.exists()
+    out = session()
+    assert "ARCHIVE dumped\n" in out and "WARMUP True\n" in out
     (archive,) = archives()
-    assert "ARCHIVE used\n" in session(warm=False)
+    out = session()
+    assert "ARCHIVE used\n" in out and "JOBS 0\n" in out
     assert archives() == [archive]
 
     archive.chmod(0o644)
     os.truncate(archive, 1 << 20)
-    assert "ARCHIVE dumped\n" in session(warm=True)
+    out = session()
+    assert "ARCHIVE dumped\n" in out and "WARMUP True\n" in out
     (archive,) = archives()
 
     size = archive.stat().st_size
     archive.chmod(0o644)
     archive.write_bytes(os.urandom(size))
-    assert "ARCHIVE rejected\n" in session(warm=False)
+    assert "ARCHIVE rejected\n" in session()
     assert archives() == []
 
 
@@ -190,6 +208,54 @@ def test_class_archive_gate(tmp_path):
     blocker = tmp_path / "not_a_dir"
     blocker.write_text("")
     assert _archive_stem({}, dict(base, XDG_CACHE_HOME=str(blocker))) is None
+
+
+def test_archive_stem_keeps_its_key(tmp_path):
+    """The key hashes the same inputs, "warmed" tag included, that
+    archives already in users' caches were dumped under, so none of
+    them is orphaned."""
+    import hashlib
+    import shutil
+
+    import pyspark
+    from pyspark.find_spark_home import _find_spark_home
+
+    from common_crawl___autumn_2025_spark.session import _archive_stem
+
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("SPARK_GRAFT_NO_LOCAL_MASTER", "SPARK_GRAFT_DRIVER_MEM")
+    }
+    env.update(XDG_CACHE_HOME=str(tmp_path), SPARK_CONF_DIR=str(tmp_path / "no_conf"))
+    jhome = env.get("JAVA_HOME")
+    java = os.path.realpath(os.path.join(jhome, "bin", "java") if jhome else shutil.which("java"))
+    modules = os.stat(os.path.join(os.path.dirname(java), "..", "lib", "modules"))
+    key = ["warmed", java, modules.st_size, modules.st_mtime_ns, pyspark.__version__]
+    jars = sorted(os.scandir(os.path.join(_find_spark_home(), "jars")), key=lambda e: e.name)
+    key += [(j.name, j.stat().st_size, j.stat().st_mtime_ns) for j in jars]
+    digest = hashlib.sha256(repr(key).encode()).hexdigest()[:16]
+    assert _archive_stem({}, env) == str(tmp_path / "common_crawl_spark" / "cds" / digest)
+
+
+def test_second_crawl_recompiles_no_generated_code(spark, tmp_path):
+    """Spark caches generated code per code body and context class
+    loader (driver and executor threads differ), and a crawl needs more
+    entries than the default 100 hold: at that size every crawl of this
+    spec recompiled 18-19 of its 95 bodies. With the session's 1024
+    entries a second identical crawl compiles none, except that a pool
+    thread started under another class loader may compile a body or two
+    once more (1 crawl in 24 compiled one)."""
+    from common_crawl___autumn_2025_spark import synthetic as syn
+    from common_crawl___autumn_2025_spark.crawl.frontier import CrawlEngine, CrawlSpec
+
+    spec = CrawlSpec(web=syn.WebConfig(n_hosts=12), max_depth=1, max_rounds=3)
+    seeds = syn.seed_urls(spec.web, 10)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    CrawlEngine(spark, spec, str(tmp_path / "first"), partitions=2).run(seeds)
+    before = compiles.getCount()
+    CrawlEngine(spark, spec, str(tmp_path / "second"), partitions=2).run(seeds)
+    assert compiles.getCount() - before <= 2
 
 
 def _fake_jvm_session(jdk, archive_bytes: int):
