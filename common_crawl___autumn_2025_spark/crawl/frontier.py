@@ -69,6 +69,11 @@ FETCHED_SCHEMA = FRONTIER_SCHEMA + (
 MATCH_SCHEMA = "seed_id long, url string, surt string, target_number string, round int"
 
 
+def target_hits(fetched: DataFrame) -> DataFrame:
+    """Fetched pages whose content carries a target number."""
+    return fetched.where((F.col("status") == 200) & (F.col("target_number") != ""))
+
+
 def release(df: DataFrame) -> None:
     """Drop the blocks of an eager ``localCheckpoint``. Its logical
     plan is a ``LogicalRDD`` over the checkpointed RDD, and only that
@@ -197,12 +202,12 @@ def seeds_frontier(spark: SparkSession, seeds: list[str]) -> DataFrame:
             # row flow on would poison the robots path parse
             yield out[cu.astype(bool).values]
 
+    # coalesce, not a seed_id shuffle: createDataFrame already spreads
+    # the rows, and round 0 repartitions them by surt anyway
     parts = max(1, min(
         spark.sparkContext.defaultParallelism, -(-len(seeds) // 2048)
     ))
-    return raw.repartition(parts, "seed_id").mapInPandas(
-        canon, schema=FRONTIER_SCHEMA
-    )
+    return raw.coalesce(parts).mapInPandas(canon, schema=FRONTIER_SCHEMA)
 
 
 def _fetch_map(spec: CrawlSpec, fetcher=None):
@@ -278,22 +283,25 @@ class CrawlEngine:
        the ROBOTS FLAGS FUSED INTO THE SAME ARROW PASS + exact
        confirm + early-exit filter, eager ``localCheckpoint``,
        released once the round's fetch has read it),
-    2. the seen-set append (one write job, on a one-worker executor
+    2. the seen-set append (one write job sized like the round's
+       other stages, one file per write task, on a one-worker executor
        scoped to the round) CONCURRENTLY with
     3. the schedule+fetch job (politeness window + fetch
        ``mapInPandas`` — fetch is the job's ONLY Python stage, eager
        ``localCheckpoint``), then
-    4. one tiny new-matched-seed-ids collect (skipped entirely once
-       the matched set outgrows the driver mirror), and
-    5. the four snapshot table writes, submitted concurrently while
+    4. the four snapshot table writes, submitted concurrently while
        the round's frontier is at most ``concurrent_commit_threshold``
        rows and one after another above it. The commit runs on the
-       run's one-worker executor and overlaps the next round.
+       run's one-worker executor and overlaps the next round, and
+    5. except on a run's final round, one tiny new-matched-seed-ids
+       collect (skipped once the matched set outgrows the driver
+       mirror) and the next-frontier count. The next frontier's
+       early-exit gate anti-joins the round's hit seed ids
+       (``target_hits``), so its plan has no new-matches window.
 
-    Each round therefore runs exactly one Python worker stage per
-    job — at high local parallelism a chained robots->fetch Python
-    pair cost one extra worker pool per task thread, which is what
-    oversubscribed the box past ~16 task threads.
+    Each round runs one Python worker stage per job: a chained
+    robots->fetch Python pair cost one extra worker pool per task
+    thread, which oversubscribed the box past ~16 task threads.
 
     Partition counts adapt to the round size (``rows_per_task_*``) so
     a small round is not taxed with ``defaultParallelism`` empty
@@ -301,11 +309,12 @@ class CrawlEngine:
     Early-exit / first-match filtering uses a driver-held matched-seed
     id set (``isin``) below ``matched_isin_limit``, a broadcast
     anti-join above it, and a left_anti join against the matched seed
-    ids (committed ``matches`` plus the last round's hits) once the set
-    passes ``matched_mirror_limit`` (no driver state at 10^7+ matches). Robots rules
-    have one path per source: the web config's rules are computed
-    inside the Bloom-probe Arrow pass, and a caller's robots table is
-    always broadcast-joined (``robots.with_robots_flags``).
+    ids (committed ``matches`` plus the last round's hits) once the
+    set passes ``matched_mirror_limit`` (no driver state at 10^7+
+    matches). Robots rules have one path per source: the web config's
+    rules are computed inside the Bloom-probe Arrow pass, and a
+    caller's robots table is always broadcast-joined
+    (``robots.with_robots_flags``).
     """
 
     # matched-seed filters switch from driver isin to a broadcast
@@ -408,19 +417,17 @@ class CrawlEngine:
 
     def _next_frontier_count_fast(self, fetched: DataFrame) -> int:
         """EXACT row count of the round's next frontier as one
-        aggregate over the eagerly-checkpointed fetch — the count job
-        otherwise re-derives the whole next_frontier plan, including
-        the new-matches window subtree the mirror collect just
-        materialized (guide §2.4: don't recompute a subtree another
-        job already paid for). Equality with count(next_frontier) is
-        by construction: explode(admitted) emits size(admitted) rows
-        per page passing the expansion gates, and the early-exit pair
-        (pre-update matched filter + left_anti vs this round's delta)
-        is exactly one membership test against the JUST-UPDATED
-        mirror (old ∪ delta); each retry-eligible row re-enqueues
-        exactly once, bypassing the matched gate like retry_next
-        does. Only valid after run() folded the round's delta into
-        the mirror; equality is pytest-pinned across the replay grid."""
+        aggregate over the eagerly-checkpointed fetch, instead of a
+        job re-deriving the whole next_frontier plan. Equality with
+        count(next_frontier) is by construction: explode(admitted)
+        emits size(admitted) rows per page passing the expansion
+        gates, and the early-exit pair (pre-update matched filter +
+        left_anti vs this round's hits) is exactly one membership test
+        against the JUST-UPDATED mirror (old ∪ hits); each
+        retry-eligible row re-enqueues exactly once, bypassing the
+        matched gate like retry_next does. Only valid after run()
+        folded the round's hits into the mirror; equality is
+        pytest-pinned across the replay grid."""
         if not self._mirror_valid:
             raise ValueError("fast count requires the driver mirror")
         spec = self.spec
@@ -682,6 +689,7 @@ class CrawlEngine:
                     unseen.where(F.col("retry_count") == 0).select("surt"),
                     round_no,
                     assume_unique=True,
+                    partitions=parts_cheap,
                 )
                 fetched = self._schedule_and_fetch(unseen, n_frontier, fused_robots)
                 n_attempted = added.result()
@@ -698,7 +706,7 @@ class CrawlEngine:
         # records only the first-ever match per seed (oracle.py step 6).
         hit_w = Window.partitionBy("seed_id").orderBy("priority", "surt")
         new_matches = (
-            fetched.where((F.col("status") == 200) & (F.col("target_number") != ""))
+            target_hits(fetched)
             .withColumn("__rn", F.row_number().over(hit_w))
             .where(F.col("__rn") == 1)
             .select(
@@ -717,16 +725,15 @@ class CrawlEngine:
 
         # 8. link expansion from unsatisfied seeds' 200-pages. The
         # early-exit filter is split into (cumulative-through-last-
-        # round) + (this round's tiny delta) so the mirror fast path
-        # still applies to the bulk and no driver collect is needed
-        # for the delta — AQE broadcasts the window-over-checkpointed
-        # delta in the same job that writes/consumes next_frontier.
+        # round) + (this round's hit seed ids): the mirror fast path
+        # applies to the bulk, and after it the hits are the same set
+        # test as ``new_matches``, without its window shuffle.
         expandable = fetched.where(
             (F.col("status") == 200) & (F.col("depth") < spec.max_depth)
         )
         if spec.early_exit:
             expandable = self._filter_unmatched(expandable, matches).join(
-                new_matches.select("seed_id"), on=["seed_id"], how="left_anti"
+                target_hits(fetched).select("seed_id"), on=["seed_id"], how="left_anti"
             )
 
         # admission already ran inside the fetch pass (the ``admitted``
@@ -820,10 +827,8 @@ class CrawlEngine:
 
     def run(self, seeds: list[str], resume: bool = False) -> dict:
         spark, spec = self.spark, self.spec
-        empty_matches = spark.createDataFrame([], MATCH_SCHEMA)
         start_round = 0
-        frontier = seeds_frontier(spark, seeds)
-        matches = empty_matches
+        matches = spark.createDataFrame([], MATCH_SCHEMA)
         self._matched_ids = set()
         self._mirror_valid = True  # run() owns the mirror from here
         self._matched_df_n = None  # invalidate the broadcast-side cache
@@ -865,8 +870,9 @@ class CrawlEngine:
                 self.seen.rollback(latest)
 
         summary = {"rounds": [], "config_hash": spec.config_hash()}
-        frontier_count = len(seeds) if start_round == 0 else None
-        if start_round > 0:
+        if start_round == 0:
+            frontier, frontier_count = seeds_frontier(spark, seeds), len(seeds)
+        else:
             frontier_count = self.store.read_manifest(start_round - 1)["tables"][
                 "frontier"
             ]["rows"]
@@ -906,9 +912,7 @@ class CrawlEngine:
                     # but is missing from the delta had already matched.
                     # Unlike the delta (an anti-join against the previous
                     # ``matches``), it reads only this round's fetch.
-                    hits = fetched.where(
-                        (F.col("status") == 200) & (F.col("target_number") != "")
-                    ).select("seed_id")
+                    hits = target_hits(fetched).select("seed_id")
                     if pending is not None:
                         self._finish_commit(pending, summary)
                         for df in held[:-2]:
@@ -948,18 +952,21 @@ class CrawlEngine:
                         # first iteration: no prior commit to fold at, so
                         # the hits join the pre-loop cumulative base here
                         matches = matches.select("seed_id").unionByName(hits)
+                    if round_no + 1 >= spec.max_rounds:
+                        # the mirror and the count serve only later rounds;
+                        # a resume rebuilds both from the committed state
+                        break
                     # mirror update first, then the next-frontier count:
                     # once the round's hits are folded into the driver
                     # mirror, count(next_frontier) collapses to ONE
                     # aggregate over the checkpointed fetch
-                    # (_next_frontier_count_fast) instead of a multi-stage
-                    # job re-deriving the new-matches window subtree
-                    # (r7, idle host: 0.6-1.9 s against ~0.2-0.3 s). The
-                    # mirror needs only the SET of seed ids with a hit, so
-                    # the collect is one narrow stage over ``hits``; ids
-                    # the mirror already holds are dropped in the same
-                    # stage, bounding driver transfer by this round's
-                    # newly matched seeds even with early_exit off.
+                    # (_next_frontier_count_fast; r7, idle host: 0.6-1.9 s
+                    # against ~0.2-0.3 s). The mirror needs only the SET
+                    # of seed ids with a hit, so the collect is one narrow
+                    # stage over ``hits``; ids the mirror already holds
+                    # are dropped in the same stage, bounding driver
+                    # transfer by this round's newly matched seeds even
+                    # with early_exit off.
                     if self._mirror_valid:
                         self._matched_ids.update(
                             r[0] for r in self._filter_unmatched(hits, None).collect()
@@ -968,15 +975,7 @@ class CrawlEngine:
                             self._mirror_valid = False
                             self._matched_ids = set()
                             self._matched_df_n = None
-                    if round_no + 1 >= spec.max_rounds:
-                        # final round: the count's ONLY consumers are the
-                        # next iteration's loop gate, sizing, and metrics
-                        # — none of which exist past max_rounds. A later
-                        # resume reads the committed frontier table's row
-                        # count from the manifest, never driver memory,
-                        # so skipping the job here changes nothing.
-                        frontier_count = None
-                    elif (
+                    if (
                         self._mirror_valid
                         and len(self._matched_ids) <= self.fast_count_mirror_limit
                     ):

@@ -7,9 +7,10 @@ Neither survives a restart nor scales past one machine. The engine's
 equivalent is:
 
 - an exact, Parquet-backed ``url_seen`` table ``(shard INT,
-  surt STRING, first_round INT)``, hash-sharded by
-  ``pmod(xxhash64(surt), n_shards)`` (a JVM projection — see
-  ``shard_expr``);
+  surt STRING, first_round INT)``, partitioned by ``first_round``
+  only, whose ``shard`` column is ``pmod(xxhash64(surt), n_shards)``
+  (a JVM projection — see ``shard_expr``), so an append writes one
+  file per write task, not one per shard;
 - a per-shard PACKED Bloom-bitmap sidecar, built and merged entirely
   by executor tasks (each shard's rows land in one task, which
   publishes its own ``shard=N.npy`` under tmp+rename), used as a
@@ -54,6 +55,7 @@ from __future__ import annotations
 
 import functools
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -155,8 +157,8 @@ class SeenSet:
 
     Layout::
 
-        <path>/exact/             parquet, partitioned by shard
-        <path>/bloom/shard=N.npy  packed bitmaps
+        <path>/exact/first_round=R/  parquet (shard, surt)
+        <path>/bloom/shard=N.npy     packed bitmaps
     """
 
     def __init__(
@@ -201,6 +203,7 @@ class SeenSet:
         return os.path.join(self._bloom_dir, "FORMAT")
 
     def _check_format(self, create: bool = False) -> None:
+        self._round_dirs()  # refuses an exact table of the old layout
         f = self._format_file()
         if os.path.exists(f):
             with open(f) as fh:
@@ -232,22 +235,31 @@ class SeenSet:
     def exact_path(self) -> str:
         return os.path.join(self.path, "exact")
 
-    def _has_exact(self) -> bool:
+    def _round_dirs(self) -> dict[int, str]:
+        """``first_round -> directory`` of the exact table. A table
+        written under the former ``shard=S/first_round=R`` layout
+        fails loudly: Spark's partition discovery would misread it."""
         p = self.exact_path
-        return os.path.exists(p) and any(
-            f.startswith("shard=") or f.endswith(".parquet") for f in os.listdir(p)
-        )
+        names = os.listdir(p) if os.path.isdir(p) else []
+        if any(n.startswith("shard=") for n in names):
+            raise ValueError(
+                f"seen table {p} has the old shard=S/first_round=R layout; "
+                "this version partitions by first_round only: use a clean root"
+            )
+        return {
+            int(n.split("=", 1)[1]): os.path.join(p, n)
+            for n in names if n.startswith("first_round=")
+        }
 
     def exact_df(self) -> DataFrame:
-        if self._has_exact():
-            # the order Spark infers: data column, then partition columns
-            schema = "surt string, shard int, first_round int"
-            return self.spark.read.schema(schema).parquet(self.exact_path)
+        if self._round_dirs():
+            # the order Spark infers: data columns, then first_round
+            return self.spark.read.schema(SEEN_SCHEMA).parquet(self.exact_path)
         return self.spark.createDataFrame([], SEEN_SCHEMA)
 
     def has_state(self) -> bool:
         """True if any exact rows or Bloom sidecars exist."""
-        return self._has_exact() or (
+        return bool(self._round_dirs()) or (
             os.path.isdir(self._bloom_dir)
             and any(f.startswith("shard=") for f in os.listdir(self._bloom_dir))
         )
@@ -256,8 +268,6 @@ class SeenSet:
         """Drop all seen state (exact table + Bloom sidecars). Used
         when resuming into a root whose first round never committed —
         the committed state is empty, so the seen set must be too."""
-        import shutil
-
         shutil.rmtree(self.exact_path, ignore_errors=True)
         shutil.rmtree(self._bloom_dir, ignore_errors=True)
         os.makedirs(self._bloom_dir, exist_ok=True)
@@ -265,7 +275,8 @@ class SeenSet:
     # -- updates ---------------------------------------------------------
 
     def add(
-        self, surts: DataFrame, round_no: int, assume_unique: bool = False
+        self, surts: DataFrame, round_no: int, assume_unique: bool = False,
+        partitions: int | None = None,
     ) -> int:
         """Union new surts into the exact table + Bloom shards.
 
@@ -285,8 +296,12 @@ class SeenSet:
         from the exact table anyway).
 
         The row count comes from the written files' parquet footers —
-        no count job. Layout is ``shard=S/first_round=R`` so rollback
-        is a filesystem delete of ``first_round>R`` directories.
+        no count job. The table is partitioned by ``first_round`` only
+        (``shard`` is a data column), so a round adds one file per
+        write task and rollback is a filesystem delete of
+        ``first_round>R`` directories. ``partitions`` sizes the append's
+        shuffle to the rows it appends (the crawl round passes its
+        own sizing; default ``min(n_shards, defaultParallelism)``).
         ``assume_unique=True`` skips the defensive ``distinct`` when
         the caller guarantees unique non-null surts (the crawl round
         does: candidates are surt-deduped upstream).
@@ -294,7 +309,7 @@ class SeenSet:
         self._check_format(create=True)
         n_shards, bits, k = self.n_shards, self.bits, self.k
         bloom_dir = self._bloom_dir
-        write_parts = min(
+        write_parts = partitions or min(
             n_shards, self.spark.sparkContext.defaultParallelism
         )
 
@@ -340,7 +355,7 @@ class SeenSet:
             .repartition(write_parts, "shard")
             .mapInPandas(shard_and_sidecar, schema=SEEN_SCHEMA)
             .write.mode("append")
-            .partitionBy("shard", "first_round")
+            .partitionBy("first_round")
             .parquet(self.exact_path)
         )
         return self._round_rows(round_no)
@@ -349,18 +364,16 @@ class SeenSet:
         """Rows written for a round, from parquet footers (no job)."""
         import pyarrow.parquet as pq
 
-        total = 0
-        for shard_dir in os.listdir(self.exact_path) if os.path.exists(self.exact_path) else []:
-            rd = os.path.join(self.exact_path, shard_dir, f"first_round={round_no}")
-            if os.path.isdir(rd):
-                for f in os.listdir(rd):
-                    if f.endswith(".parquet"):
-                        total += pq.ParquetFile(os.path.join(rd, f)).metadata.num_rows
-        return total
+        rd = self._round_dirs().get(round_no)
+        return sum(
+            pq.ParquetFile(os.path.join(rd, f)).metadata.num_rows
+            for f in (os.listdir(rd) if rd else []) if f.endswith(".parquet")
+        )
 
     def rollback(self, last_good_round: int) -> None:
-        """Drop seen rows from rounds after ``last_good_round`` and
-        rebuild the Bloom sidecars to match.
+        """Drop seen rows from rounds after ``last_good_round`` — a
+        delete of their ``first_round=R`` directories, no table
+        rewrite — and rebuild the Bloom sidecars to match.
 
         Used on resume: a crash between the seen append and the
         checkpoint commit may leave a partial round in the exact
@@ -376,24 +389,12 @@ class SeenSet:
         method — removal and full rebuild included — on every resume
         before its first probe, so the next resume repairs it.
         """
-        if not self._has_exact():
+        rounds = self._round_dirs()
+        if not rounds:
             return
-        import shutil
-
-        # partition layout shard=S/first_round=R -> rollback is a
-        # filesystem delete, no table rewrite
-        for shard_dir in os.listdir(self.exact_path):
-            sd = os.path.join(self.exact_path, shard_dir)
-            if not os.path.isdir(sd):
-                continue
-            for rd in os.listdir(sd):
-                if rd.startswith("first_round="):
-                    try:
-                        rnd = int(rd.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if rnd > last_good_round:
-                        shutil.rmtree(os.path.join(sd, rd), ignore_errors=True)
+        for rnd, rd in rounds.items():
+            if rnd > last_good_round:
+                shutil.rmtree(rd, ignore_errors=True)
 
         shutil.rmtree(self._bloom_dir, ignore_errors=True)
         os.makedirs(self._bloom_dir, exist_ok=True)

@@ -805,3 +805,53 @@ def test_rollback_emits_no_user_warning(spark, tmp_path):
         seen.rollback(0)
     assert [w for w in caught if issubclass(w.category, UserWarning)] == []
     assert {r.surt for r in seen.exact_df().collect()} == {"a)/", "b)/"}
+
+
+def test_old_exact_layout_fails_loudly(spark, tmp_path):
+    """A seen root whose exact table still has the former
+    ``shard=S/first_round=R`` layout is refused, with an error naming
+    that layout, by ``add``, ``filter_unseen`` and ``rollback``. The
+    crawl config hash does not cover the layout (it is unchanged), so
+    only this check stops a resume over such a root."""
+    root = str(tmp_path / "seen")
+    seen = SeenSet(spark, root, n_shards=2, bits_per_shard=1 << 12)
+    df = spark.createDataFrame([("a)/",), ("b)/",)], "surt string")
+    seen.add(df, 0)
+    # move round 0's files to where the old layout kept shard 0's
+    old = os.path.join(seen.exact_path, "shard=0")
+    os.makedirs(old)
+    os.rename(
+        os.path.join(seen.exact_path, "first_round=0"),
+        os.path.join(old, "first_round=0"),
+    )
+    for call in (
+        lambda: seen.add(df, 1),
+        lambda: seen.filter_unseen(df),
+        lambda: seen.rollback(0),
+    ):
+        with pytest.raises(ValueError, match="old shard=S/first_round=R layout"):
+            call()
+    assert CrawlSpec().config_hash() == "ae8b25ffcf0cbcaa"
+
+
+def test_crawl_job_budget(spark, small_spec, tmp_path):
+    """A warm 2-round crawl stays within its Spark job budget, counted
+    like the benchmark's ``frontier.jobs_per_crawl`` (highest job id
+    seen, plus one), and each round's seen-set append writes one
+    parquet file. The budget is the most jobs such a crawl ran
+    (34-35 between runs of one session); the layout partitioned by
+    shard, with a seed_id shuffle and the final-round collect, ran
+    38-39."""
+    import dataclasses
+
+    spec = dataclasses.replace(small_spec, max_rounds=2)
+    seeds = syn.seed_urls(spec.web, 10)
+    CrawlEngine(spark, spec, str(tmp_path / "cold"), partitions=2).run(seeds)
+    eng = CrawlEngine(spark, spec, str(tmp_path / "warm"), partitions=2)
+    before = _job_count(spark)
+    summary = eng.run(seeds)
+    assert _job_count(spark) - before <= 35
+    assert len(summary["rounds"]) == 2
+    for rnd in (0, 1):
+        rd = os.path.join(eng.seen.exact_path, f"first_round={rnd}")
+        assert len([f for f in os.listdir(rd) if f.endswith(".parquet")]) == 1

@@ -243,9 +243,11 @@ def test_second_crawl_recompiles_no_generated_code(spark, tmp_path):
     loader (driver and executor threads differ), and a crawl needs more
     entries than the default 100 hold: at that size every crawl of this
     spec recompiled 18-19 of its 95 bodies. With the session's 1024
-    entries a second identical crawl compiles none, except that a pool
-    thread started under another class loader may compile a body or two
-    once more (1 crawl in 24 compiled one)."""
+    entries a second identical crawl compiles none, or now and then one
+    body once more (4 of 24 fresh sessions compiled one). The cause is
+    not the pool threads' context class loader: the main, seen-add and
+    commit threads all reach the JVM with the same one, and pool
+    threads set to the main thread's loader recompiled as often."""
     from common_crawl___autumn_2025_spark import synthetic as syn
     from common_crawl___autumn_2025_spark.crawl.frontier import CrawlEngine, CrawlSpec
 

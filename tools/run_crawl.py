@@ -30,6 +30,24 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _next_job_id(tracker) -> int:
+    """Highest job id the status tracker has seen, plus one (the
+    benchmark's ``frontier.jobs_per_crawl`` counts jobs this way)."""
+    return max(tracker.getJobIdsForGroup(None), default=-1) + 1
+
+
+def _spark_tasks(tracker, jobs: range) -> int:
+    """Tasks completed by the stages of ``jobs``. A stage shared by
+    two jobs counts once, and one the tracker no longer retains
+    (``spark.ui.retainedJobs``/``retainedStages``) counts zero."""
+    stages = set()
+    for j in jobs:
+        info = tracker.getJobInfo(j)
+        stages.update(info.stageIds if info else ())
+    infos = (tracker.getStageInfo(s) for s in stages)
+    return sum(i.numCompletedTasks for i in infos if i)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description="Run crawl rounds")
     ap.add_argument("--hosts", type=int, default=100)
@@ -83,10 +101,13 @@ def main() -> None:
         seen_bits_per_shard=args.seen_bits,
     )
     seeds = syn.seed_urls(spec.web, args.seeds)
+    tracker = spark.sparkContext.statusTracker()
     t0 = time.time()
+    job0 = _next_job_id(tracker)
     engine = CrawlEngine(spark, spec, args.checkpoint, partitions=args.partitions)
     summary = engine.run(seeds, resume=args.resume)
     elapsed = time.time() - t0
+    crawl_jobs = range(job0, _next_job_id(tracker))
     fetched = sum(r["fetched"] for r in summary["rounds"])
     extra = {}
     if args.warc_out is not None:
@@ -116,6 +137,9 @@ def main() -> None:
                 "elapsed_sec": round(elapsed, 2),
                 "fetched": fetched,
                 "urls_per_sec": round(fetched / elapsed, 2) if elapsed else None,
+                # the crawl's job budget (warc/expiry work excluded)
+                "spark_jobs": len(crawl_jobs),
+                "spark_tasks": _spark_tasks(tracker, crawl_jobs),
                 "checkpoint": args.checkpoint,
                 **(
                     {"seen_sidecars": engine.seen.sidecar_stats()}
