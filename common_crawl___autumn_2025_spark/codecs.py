@@ -202,20 +202,15 @@ def phash64(pixels: np.ndarray) -> int:
     """
     gray = pixels.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
     h, w = gray.shape
-    # block-mean resize to 8x8 via index binning (handles any h, w >= 8)
+    # block-mean resize to 8x8 via index binning (handles any h, w >= 8):
+    # block sums by two reduceat passes, divided by the block areas
     ys = (np.arange(8 + 1) * h) // 8
     xs = (np.arange(8 + 1) * w) // 8
-    cells = np.empty((8, 8), dtype=np.float64)
-    for i in range(8):
-        for j in range(8):
-            cells[i, j] = gray[ys[i] : ys[i + 1], xs[j] : xs[j + 1]].mean()
-    bits = (cells > cells.mean()).flatten()
-    val = 0
-    for bit in bits:
-        val = (val << 1) | int(bit)
-    if val >= 1 << 63:  # store as signed int64 for Spark LongType
-        val -= 1 << 64
-    return val
+    sums = np.add.reduceat(np.add.reduceat(gray, ys[:-1], axis=0), xs[:-1], axis=1)
+    cells = sums / np.outer(np.diff(ys), np.diff(xs))
+    bits = (cells > cells.mean()).ravel()
+    # first cell = most significant bit; signed int64 for Spark LongType
+    return int(np.packbits(bits).view(">i8")[0])
 
 
 def hamming64(a: int, b: int) -> int:

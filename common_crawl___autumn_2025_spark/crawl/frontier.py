@@ -69,9 +69,11 @@ FETCHED_SCHEMA = FRONTIER_SCHEMA + (
 MATCH_SCHEMA = "seed_id long, url string, surt string, target_number string, round int"
 
 
-def target_hits(fetched: DataFrame) -> DataFrame:
-    """Fetched pages whose content carries a target number."""
-    return fetched.where((F.col("status") == 200) & (F.col("target_number") != ""))
+def is_hit():
+    """A fetched page whose content carries a target number; a NULL
+    target is no hit, as in the oracle."""
+    hit = (F.col("status") == 200) & (F.col("target_number") != "")
+    return F.coalesce(hit, F.lit(False))
 
 
 def release(df: DataFrame) -> None:
@@ -292,12 +294,14 @@ class CrawlEngine:
     4. the four snapshot table writes, submitted concurrently while
        the round's frontier is at most ``concurrent_commit_threshold``
        rows and one after another above it. The commit runs on the
-       run's one-worker executor and overlaps the next round, and
+       run's one-worker executor and overlaps the next round. The
+       matches delta, next frontier and records read the fetch
+       coalesced to the round's size: a small round's seed_id windows
+       (first hit per seed; the early-exit gate's hit per seed) then
+       plan no exchange. And
     5. except on a run's final round, one tiny new-matched-seed-ids
        collect (skipped once the matched set outgrows the driver
-       mirror) and the next-frontier count. The next frontier's
-       early-exit gate anti-joins the round's hit seed ids
-       (``target_hits``), so its plan has no new-matches window.
+       mirror) and the next-frontier count, both on that view.
 
     Each round runs one Python worker stage per job: a chained
     robots->fetch Python pair cost one extra worker pool per task
@@ -417,15 +421,16 @@ class CrawlEngine:
 
     def _next_frontier_count_fast(self, fetched: DataFrame) -> int:
         """EXACT row count of the round's next frontier as one
-        aggregate over the eagerly-checkpointed fetch, instead of a
-        job re-deriving the whole next_frontier plan. Equality with
+        aggregate over the fetch (run() passes its round-sized view,
+        so a small round plans no exchange), instead of a job
+        re-deriving the whole next_frontier plan. Equality with
         count(next_frontier) is by construction: explode(admitted)
         emits size(admitted) rows per page passing the expansion
         gates, and the early-exit pair (pre-update matched filter +
-        left_anti vs this round's hits) is exactly one membership test
-        against the JUST-UPDATED mirror (old ∪ hits); each
-        retry-eligible row re-enqueues exactly once, bypassing the
-        matched gate like retry_next does. Only valid after run()
+        the seed window dropping seeds with a hit this round) is one
+        membership test against the JUST-UPDATED mirror (old ∪ hits);
+        each retry-eligible row re-enqueues exactly once, bypassing
+        the matched gate like retry_next does. Only valid after run()
         folded the round's hits into the mirror; equality is
         pytest-pinned across the replay grid."""
         if not self._mirror_valid:
@@ -700,13 +705,20 @@ class CrawlEngine:
         phase["fetch_and_seen_add"] = round(time.time() - t0, 3)
         t0 = time.time()
 
+        # The fetch checkpoint has one partition per fetch task. Steps
+        # 7-9 read it coalesced to the round's size, before any
+        # window: at one partition the seed_id windows' clustering is
+        # already met, so a small round plans no exchange (and no
+        # shuffle-map job); at scale parts_cheap equals the fetch's.
+        fetched_cheap = fetched.coalesce(parts_cheap)
+
         # 7. new matches: canonically-first target hit per seed.
         # First-ever-match semantics are UNCONDITIONAL (independent of
         # early_exit, which only gates frontier pruning): the oracle
         # records only the first-ever match per seed (oracle.py step 6).
         hit_w = Window.partitionBy("seed_id").orderBy("priority", "surt")
         new_matches = (
-            target_hits(fetched)
+            fetched_cheap.where(is_hit())
             .withColumn("__rn", F.row_number().over(hit_w))
             .where(F.col("__rn") == 1)
             .select(
@@ -715,26 +727,24 @@ class CrawlEngine:
             )
         )
         new_matches = self._filter_unmatched(new_matches, matches)
-        # NOTE: the driver mirror update (collect of the delta's seed
-        # ids) deliberately does NOT happen here — run() performs it
-        # AFTER launching the background commit so the tiny collect
-        # job overlaps the commit writes instead of sitting on the
-        # round's critical path (VERDICT r4 "Next round" #1: the
-        # new_matches phase measured ~0.6 s/round of fixed latency).
+        # the driver mirror update is run()'s, after it has submitted
+        # the commit, so its collect overlaps the commit writes
         phase["new_matches"] = round(time.time() - t0, 3)
 
         # 8. link expansion from unsatisfied seeds' 200-pages. The
-        # early-exit filter is split into (cumulative-through-last-
-        # round) + (this round's hit seed ids): the mirror fast path
-        # applies to the bulk, and after it the hits are the same set
-        # test as ``new_matches``, without its window shuffle.
-        expandable = fetched.where(
-            (F.col("status") == 200) & (F.col("depth") < spec.max_depth)
-        )
+        # early-exit gate is (matched through last round) then (a hit
+        # this round): the matched filter drops the bulk, and a
+        # seed_id window over the surviving expandable and hit rows
+        # drops every seed with a hit, on the view new_matches reads.
+        can_expand = (F.col("status") == 200) & (F.col("depth") < spec.max_depth)
         if spec.early_exit:
-            expandable = self._filter_unmatched(expandable, matches).join(
-                target_hits(fetched).select("seed_id"), on=["seed_id"], how="left_anti"
+            expandable = (
+                self._filter_unmatched(fetched_cheap.where(can_expand | is_hit()), matches)
+                .withColumn("__hit", F.max(is_hit()).over(Window.partitionBy("seed_id")))
+                .where(can_expand & ~F.col("__hit"))
             )
+        else:
+            expandable = fetched_cheap.where(can_expand)
 
         # admission already ran inside the fetch pass (the ``admitted``
         # struct column), so frontier derivation is a JVM-only explode
@@ -757,7 +767,7 @@ class CrawlEngine:
         if spec.retry_max > 0:
             # transient failures re-enqueue into the next round with a
             # bumped attempt counter, capped at retry_max
-            retry_next = fetched.where(
+            retry_next = fetched_cheap.where(
                 F.col("status").isin(list(spec.retry_statuses))
                 & (F.col("retry_count") < spec.retry_max)
             ).select(
@@ -768,16 +778,12 @@ class CrawlEngine:
             )
             next_frontier = next_frontier.unionByName(retry_next)
 
-        # 9. canonical record table rows (input_hint schema). Scans of
-        # the checkpointed fetch are coalesced so a small round does
-        # not commit defaultParallelism near-empty files (small-file
-        # problem at scale; footer-walk cost every round here).
-        # records carry image BYTES (~KBs/row), so they get ~8x more
-        # writers than the thin metadata tables for the same row count.
-        records = (
-            fetched.where(F.col("status") == 200)
-            .select("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
-            .coalesce(self._parts(n_frontier, 1024))
+        # 9. canonical record table rows (input_hint schema), on the
+        # round-sized view: no near-empty file per fetch task. Records
+        # carry image BYTES (~KBs/row), so they get ~8x more writers
+        # than the thin metadata tables for the same row count.
+        records = fetched_cheap.where(F.col("status") == 200).select(
+            "image_id", "bytes", "w", "h", "fmt", "caption", "phash"
         )
 
         metrics = {
@@ -855,13 +861,17 @@ class CrawlEngine:
                 frontier = self.store.read_table(latest, "frontier", FRONTIER_SCHEMA)
                 matches = self.read_matches_cum(latest)
                 # only rebuild the driver mirror while it is small
-                # (manifest cumulative counter — no job); a resume
-                # with 10^7+ matches keeps the table-anti-join path
-                # instead of collecting them all to the driver
+                # (manifest cumulative counter); a resume with 10^7+
+                # matches keeps the table-anti-join path. The ids are
+                # read from the delta files on the driver, no job.
                 n_matched = m["metrics"].get("matches_total", 0)
                 if n_matched <= self.matched_mirror_limit:
+                    import pyarrow.parquet as pq
+
                     self._matched_ids = {
-                        r[0] for r in matches.select("seed_id").collect()
+                        i
+                        for p in self.store.delta_table_paths("matches", latest)
+                        for i in pq.read_table(p, columns=["seed_id"])["seed_id"].to_pylist()
                     }
                 else:
                     self._matched_ids = set()
@@ -906,13 +916,16 @@ class CrawlEngine:
                         round_no, frontier, matches, frontier_count=frontier_count
                     )
                     held.append(fetched)
+                    # the round-sized view run_round's plans read: the
+                    # hits and the fast count below need no exchange on it
+                    cheap = fetched.coalesce(self._parts(frontier_count, self.rows_per_task_cheap))
                     # seed ids with any target hit this round. As a
                     # membership set, (matched through R-1) ∪ hits equals
                     # (matched through R-1) ∪ delta: a seed that hits now
                     # but is missing from the delta had already matched.
                     # Unlike the delta (an anti-join against the previous
                     # ``matches``), it reads only this round's fetch.
-                    hits = target_hits(fetched).select("seed_id")
+                    hits = cheap.where(is_hit()).select("seed_id")
                     if pending is not None:
                         self._finish_commit(pending, summary)
                         for df in held[:-2]:
@@ -923,9 +936,8 @@ class CrawlEngine:
                             .select("seed_id")
                             .unionByName(hits)
                         )
-                    write_parts = self._parts(frontier_count, 8192)
                     fetch_log = fetched.drop("bytes", "admitted", "caption").coalesce(
-                        write_parts
+                        self._parts(frontier_count, 8192)
                     )
                     future = commits.submit(
                         self.store.commit,
@@ -935,12 +947,8 @@ class CrawlEngine:
                             "fetch_log": fetch_log,
                             # PER-ROUND DELTA: only this round's new
                             # matches are written; cumulative state is
-                            # the multi-path read (read_matches_cum).
-                            # Repartition, NOT coalesce: coalesce(1) over
-                            # the window plan measured 6× slower than the
-                            # explicit tiny shuffle (it drags the window
-                            # stage into the single coalesced task)
-                            "matches": match_delta.repartition(write_parts),
+                            # the multi-path read (read_matches_cum)
+                            "matches": match_delta,
                             "records": records,
                         },
                         metrics,
@@ -957,16 +965,12 @@ class CrawlEngine:
                         # a resume rebuilds both from the committed state
                         break
                     # mirror update first, then the next-frontier count:
-                    # once the round's hits are folded into the driver
-                    # mirror, count(next_frontier) collapses to ONE
-                    # aggregate over the checkpointed fetch
-                    # (_next_frontier_count_fast; r7, idle host: 0.6-1.9 s
-                    # against ~0.2-0.3 s). The mirror needs only the SET
-                    # of seed ids with a hit, so the collect is one narrow
-                    # stage over ``hits``; ids the mirror already holds
-                    # are dropped in the same stage, bounding driver
-                    # transfer by this round's newly matched seeds even
-                    # with early_exit off.
+                    # once the round's hits are in the driver mirror,
+                    # count(next_frontier) is ONE aggregate over the fetch
+                    # (_next_frontier_count_fast). The collect is one
+                    # narrow stage over ``hits`` that drops the ids the
+                    # mirror already holds, so driver transfer is bounded
+                    # by this round's newly matched seeds.
                     if self._mirror_valid:
                         self._matched_ids.update(
                             r[0] for r in self._filter_unmatched(hits, None).collect()
@@ -979,7 +983,7 @@ class CrawlEngine:
                         self._mirror_valid
                         and len(self._matched_ids) <= self.fast_count_mirror_limit
                     ):
-                        frontier_count = self._next_frontier_count_fast(fetched)
+                        frontier_count = self._next_frontier_count_fast(cheap)
                     else:
                         frontier_count = nxt.count()
                     frontier = nxt

@@ -87,6 +87,39 @@ def test_phash_properties():
     assert -(1 << 63) <= phash64(a) < (1 << 63)  # fits Spark LongType
 
 
+def _phash64_loop(pixels):
+    """The per-cell loop form ``phash64`` had before it was vectorized:
+    every stored phash (records, fetch payloads) was computed by it."""
+    gray = pixels.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
+    h, w = gray.shape
+    ys = (np.arange(8 + 1) * h) // 8
+    xs = (np.arange(8 + 1) * w) // 8
+    cells = np.empty((8, 8), dtype=np.float64)
+    for i in range(8):
+        for j in range(8):
+            cells[i, j] = gray[ys[i] : ys[i + 1], xs[j] : xs[j + 1]].mean()
+    val = 0
+    for bit in (cells > cells.mean()).flatten():
+        val = (val << 1) | int(bit)
+    return val - (1 << 64) if val >= 1 << 63 else val
+
+
+def test_phash_matches_loop_form_bit_for_bit():
+    """The vectorized block means hash every image exactly like the
+    loop form: generated images, larger non-divisible sizes, flat
+    images (every cell ties the mean) and the 8x8 minimum."""
+    images = [syn.make_image(k) for k in range(5000)]
+    images += [syn.make_image(k, min_side=8, max_side=100) for k in range(500)]
+    images += [
+        np.full((h, w, 3), v, dtype=np.uint8)
+        for h, w in [(8, 8), (8, 13), (9, 8), (17, 31), (64, 64), (100, 99)]
+        for v in (0, 1, 37, 128, 255)
+    ]
+    images.append(np.arange(8 * 8 * 3, dtype=np.uint8).reshape(8, 8, 3))
+    for px in images:
+        assert phash64(px) == _phash64_loop(px), px.shape
+
+
 def test_records_generator_deterministic():
     a = syn.records_pandas(10, seed=42)
     b = syn.records_pandas(10, seed=42)

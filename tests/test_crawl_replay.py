@@ -385,6 +385,40 @@ def test_injected_fetcher_identical(spark, spec, seeds, oracle_result):
         shutil.rmtree(root, ignore_errors=True)
 
 
+def test_null_target_is_no_hit(spark, spec, seeds, oracle_result):
+    """A fetcher may report no target as NULL where the synthetic one
+    reports ``""``. The matches and the early-exit gate must read NULL
+    as no hit: a seed whose pages all carry NULL still expands, so the
+    fetch log (NULL read as ``""``), seen set and matches equal the
+    oracle's."""
+    import dataclasses
+
+    from common_crawl___autumn_2025_spark.crawl.fetchers import SyntheticFetcher
+
+    class NullTargets(SyntheticFetcher):
+        def fetch(self, url, attempt=0):
+            page = super().fetch(url, attempt=attempt)
+            return dataclasses.replace(page, target_number=page.target_number or None)
+
+    root = tempfile.mkdtemp(prefix="crawl_nulltarget_")
+    try:
+        eng = CrawlEngine(spark, spec, root, partitions=4, fetcher=NullTargets(spec.web))
+        eng.run(seeds)
+        log = _engine_fetch_log(eng)
+        assert any(r[-1] is None for r in log)
+        assert sorted(r[:-1] + (r[-1] or "",) for r in log) == sorted(
+            oracle_result.fetch_log
+        )
+        assert {r.surt for r in eng.seen.exact_df().collect()} == oracle_result.seen
+        got = {
+            r.seed_id: (r.url, r.surt, r.target_number, r.round)
+            for r in eng.read_matches_cum(eng.store.latest_round()).collect()
+        }
+        assert got == oracle_result.matches
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def test_http_fetcher_timeout_drop_semantics():
     """HttpFetcher maps transport errors to status 0 (drop, never
     raise — reference company_number_scrape.py:17-25) and parses the

@@ -757,8 +757,11 @@ def test_failed_commit_resumes_exactly(spark, deep_spec, monkeypatch):
 
 
 def _job_count(spark) -> int:
-    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-    return max(ids, default=-1) + 1
+    """Highest job id in the status store, plus one. The store lists
+    the jobs of every job group; ``getJobIdsForGroup(None)`` would see
+    only the ungrouped ones and miss every job a tagged crawl runs."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1) + 1
 
 
 def test_resume_reads_run_no_schema_job(spark, small_spec, tmp_path):
@@ -790,6 +793,28 @@ def test_resume_reads_run_no_schema_job(spark, small_spec, tmp_path):
         assert _job_count(spark) > before  # the job a schema spares
         assert schema == inferred.schema
     assert eng.read_matches_cum(latest).count() > 0
+
+
+def test_resume_mirror_runs_no_job(spark, small_spec, tmp_path, monkeypatch):
+    """A resume rebuilds the driver's matched-seed mirror from the
+    committed matches files on the driver: its ids are the cumulative
+    matches' seed ids, and reading them runs no Spark job (the seen
+    set's rollback, which does, is stubbed out here)."""
+    import dataclasses
+
+    seeds = syn.seed_urls(small_spec.web, 10)
+    eng = CrawlEngine(spark, small_spec, str(tmp_path), partitions=2)
+    eng.run(seeds)
+    latest = eng.store.latest_round()
+    want = {r.seed_id for r in eng.read_matches_cum(latest).collect()}
+    assert want
+    done = dataclasses.replace(small_spec, max_rounds=latest + 1)
+    resumed = CrawlEngine(spark, done, str(tmp_path), partitions=2)
+    monkeypatch.setattr(resumed.seen, "rollback", lambda round_no: None)
+    before = _job_count(spark)
+    resumed.run(seeds, resume=True)
+    assert _job_count(spark) == before
+    assert resumed._mirror_valid and resumed._matched_ids == want
 
 
 def test_rollback_emits_no_user_warning(spark, tmp_path):
@@ -837,11 +862,11 @@ def test_old_exact_layout_fails_loudly(spark, tmp_path):
 def test_crawl_job_budget(spark, small_spec, tmp_path):
     """A warm 2-round crawl stays within its Spark job budget, counted
     like the benchmark's ``frontier.jobs_per_crawl`` (highest job id
-    seen, plus one), and each round's seen-set append writes one
-    parquet file. The budget is the most jobs such a crawl ran
-    (34-35 between runs of one session); the layout partitioned by
-    shard, with a seed_id shuffle and the final-round collect, ran
-    38-39."""
+    seen, plus one) but over every job group, and each round's
+    seen-set append writes one parquet file. The budget is the most
+    jobs such a crawl ran: 23 in each of 8 runs of one session. The
+    early-exit gate as an anti-join against the round's hits, with the
+    post-fetch plans over every fetch partition, ran 34-35."""
     import dataclasses
 
     spec = dataclasses.replace(small_spec, max_rounds=2)
@@ -850,8 +875,17 @@ def test_crawl_job_budget(spark, small_spec, tmp_path):
     eng = CrawlEngine(spark, spec, str(tmp_path / "warm"), partitions=2)
     before = _job_count(spark)
     summary = eng.run(seeds)
-    assert _job_count(spark) - before <= 35
+    assert 0 < _job_count(spark) - before <= 23
     assert len(summary["rounds"]) == 2
+    # the count also sees a job run under a job group
+    sc = spark.sparkContext
+    sc.setJobGroup("job-budget-probe", "a grouped job")
+    try:
+        before = _job_count(spark)
+        spark.range(4).collect()
+        assert _job_count(spark) == before + 1
+    finally:
+        sc._jsc.clearJobGroup()
     for rnd in (0, 1):
         rd = os.path.join(eng.seen.exact_path, f"first_round={rnd}")
         assert len([f for f in os.listdir(rd) if f.endswith(".parquet")]) == 1

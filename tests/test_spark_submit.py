@@ -75,8 +75,10 @@ def test_spark_submit_py_files_crawl_matches_in_process(spark, tmp_path):
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
     assert len(summary["rounds"]) == 2
     assert summary["fetched"] > 0
-    # the crawl's job budget, read from the status tracker
+    # the crawl's job budget, read from the status store, and the
+    # driver JVM's compile time over the crawl
     assert 0 < summary["spark_jobs"] <= summary["spark_tasks"]
+    assert summary["jit_s"] > 0
 
     # 3. the identical spec in-process (same defaults run_crawl.py
     #    passes); config hash and the committed fetch logs must match

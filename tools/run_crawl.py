@@ -30,10 +30,18 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _next_job_id(tracker) -> int:
-    """Highest job id the status tracker has seen, plus one (the
-    benchmark's ``frontier.jobs_per_crawl`` counts jobs this way)."""
-    return max(tracker.getJobIdsForGroup(None), default=-1) + 1
+def _next_job_id(sc) -> int:
+    """Highest job id in the status store, plus one. The store lists
+    the jobs of every job group (``statusTracker().getJobIdsForGroup``
+    sees one group at a time, and ``None`` only the ungrouped jobs)."""
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1) + 1
+
+
+def _jit_ms(spark) -> int:
+    """Milliseconds the driver JVM's JIT compilers have spent so far."""
+    mx = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return mx.getTotalCompilationTime()
 
 
 def _spark_tasks(tracker, jobs: range) -> int:
@@ -101,13 +109,14 @@ def main() -> None:
         seen_bits_per_shard=args.seen_bits,
     )
     seeds = syn.seed_urls(spec.web, args.seeds)
-    tracker = spark.sparkContext.statusTracker()
+    sc = spark.sparkContext
     t0 = time.time()
-    job0 = _next_job_id(tracker)
+    job0, jit0 = _next_job_id(sc), _jit_ms(spark)
     engine = CrawlEngine(spark, spec, args.checkpoint, partitions=args.partitions)
     summary = engine.run(seeds, resume=args.resume)
     elapsed = time.time() - t0
-    crawl_jobs = range(job0, _next_job_id(tracker))
+    jit_s = (_jit_ms(spark) - jit0) / 1000
+    crawl_jobs = range(job0, _next_job_id(sc))
     fetched = sum(r["fetched"] for r in summary["rounds"])
     extra = {}
     if args.warc_out is not None:
@@ -139,7 +148,10 @@ def main() -> None:
                 "urls_per_sec": round(fetched / elapsed, 2) if elapsed else None,
                 # the crawl's job budget (warc/expiry work excluded)
                 "spark_jobs": len(crawl_jobs),
-                "spark_tasks": _spark_tasks(tracker, crawl_jobs),
+                "spark_tasks": _spark_tasks(sc.statusTracker(), crawl_jobs),
+                # driver JVM compile time during the crawl: at small
+                # sizes about half of a warm crawl's CPU
+                "jit_s": round(jit_s, 3),
                 "checkpoint": args.checkpoint,
                 **(
                     {"seen_sidecars": engine.seen.sidecar_stats()}
