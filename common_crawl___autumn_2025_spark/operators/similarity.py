@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..plans import load, register, table_num_rows
+from ..plans import load, register, spread_if_large, table_num_rows
 
 N_QUERIES = 5
 TOP_K = 5
@@ -77,9 +77,11 @@ def v01_cosine_topk_bruteforce(spark, sf_dir):
     # corpus side spread (r7): the single-split scan funnels the whole
     # Q·N cosine stream (~100 MB Arrow at sf1.0) through ONE task;
     # interleaved A/B at sf1.0: 0.61 s spread vs 0.83 s plain (unlike
-    # ivf_topk, where the same hint LOST — see its NOTE)
-    c = emb.repartition(
-        spark.sparkContext.defaultParallelism
+    # ivf_topk, where the same hint LOST — see its NOTE). Each corpus
+    # row makes N_QUERIES pairs, so spread only at 1024 pairs per core:
+    # a small corpus skips the shuffle and a Python task per core.
+    c = spread_if_large(
+        emb, sf_dir, "embeddings", min_rows_per_task=1024 // N_QUERIES
     ).select(F.col("vec_id").alias("hit_id"), F.col("embedding").alias("cv"))
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("hit_id"))

@@ -21,6 +21,10 @@ Cross-dialect discipline (Spark vs DuckDB must hash-match):
 
 from __future__ import annotations
 
+import functools
+import glob
+import os
+import stat
 from collections.abc import Callable
 
 QUERIES: dict[str, Callable] = {}
@@ -37,8 +41,35 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
+def _stamp(path: str):
+    """A file's inode, size, mtime and ctime; a directory's sorted entry
+    stamps, recursively. Raises ``OSError`` where ``os.stat`` cannot see
+    the path (a URI, a missing table)."""
+    st = os.stat(path)
+    if stat.S_ISDIR(st.st_mode):
+        return tuple(sorted((e.name, _stamp(e.path)) for e in os.scandir(path)))
+    return (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+
+
+@functools.lru_cache(maxsize=256)
+def _inferred_schema(spark, path: str, stamp):
+    return spark.read.parquet(path).schema
+
+
 def load(spark, sf_dir: str, table: str):
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    """A catalog table. A schema-less ``spark.read.parquet`` runs a
+    one-task job that reads a footer to infer the schema, so the schema
+    Spark inferred is kept per session, path and stamp, and every read
+    passes it to ``spark.read.schema``, which only lists the files: a
+    rewritten file, a new part file or a new session infers again, and
+    a failed inference keeps nothing. A path ``os.stat`` cannot see is
+    read schema-less."""
+    path = f"{sf_dir}/{table}.parquet"
+    try:
+        stamp = _stamp(path)
+    except OSError:
+        return spark.read.parquet(path)
+    return spark.read.schema(_inferred_schema(spark, path, stamp)).parquet(path)
 
 
 def table_num_rows(sf_dir: str, table: str) -> int:
@@ -47,9 +78,6 @@ def table_num_rows(sf_dir: str, table: str) -> int:
     full count() job per v04/v05/v06/v07 invocation; the parquet
     footer already stores the exact count). Handles both a single
     file and a directory of part files."""
-    import glob
-    import os
-
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{table}.parquet")
@@ -85,9 +113,6 @@ def maybe_broadcast(df, sf_dir: str, table: str, limit: int = BROADCAST_LIMIT_BY
     is worse than no hint. Above the limit the hint is dropped and
     AQE/statistics pick the join strategy (sort-merge / shuffled
     hash)."""
-    import glob
-    import os
-
     path = os.path.join(sf_dir, f"{table}.parquet")
     paths = [path] if os.path.isfile(path) else glob.glob(
         os.path.join(path, "*.parquet")

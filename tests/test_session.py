@@ -18,7 +18,7 @@ from common_crawl___autumn_2025_spark.session import get_spark
 
 spark = get_spark("any_cwd", cores=2, shuffle_partitions=2)
 print("ARCHIVE", spark.conf.get("spark.engine.classArchive"))
-print("JOBS", len(spark.sparkContext.statusTracker().getJobIdsForGroup(None)))
+print("JOBS", spark.sparkContext._jsc.sc().statusStore().jobsList(None).size())
 n = seeds_frontier(spark, ["http://a.example.com/", "http://b.example.org/x"]).count()
 print("COUNT", n)
 

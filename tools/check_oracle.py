@@ -20,6 +20,7 @@ import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 from common_crawl___autumn_2025_spark.session import get_spark  # noqa: E402
+from tools.run_crawl import _next_job_id  # noqa: E402
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -67,10 +68,16 @@ def main():
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    ctx = spark.sparkContext
+    t_all, j_all = time.time(), _next_job_id(ctx)
+
+    def cost() -> str:
+        return f"[{time.time() - t0:.1f}s, {_next_job_id(ctx) - j0} jobs]"
+
     for name, fn in sorted(queries.items()):
         if only and not name.startswith(only):
             continue
-        t0 = time.time()
+        t0, j0 = time.time(), _next_job_id(ctx)
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
@@ -80,8 +87,7 @@ def main():
             print(f"FAIL  {name}: spark error: {str(e)[:300]}")
             continue
         if name not in oracles:
-            print(f"rows  {name}: {len(srows)} rows (no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
+            print(f"rows  {name}: {len(srows)} rows (no oracle) {cost()}")
             if len(srows) == 0:
                 failures.append((name, "rows-only query returned 0 rows"))
             continue
@@ -112,9 +118,10 @@ def main():
             failures.append((name, f"value mismatch {bad[0]} vs {bad[1]}"))
             print(f"FAIL  {name}: {str(bad[0])[:150]} vs {str(bad[1])[:150]}")
         else:
-            print(f"OK    {name}: {len(sr)} rows match [{time.time()-t0:.1f}s]")
+            print(f"OK    {name}: {len(sr)} rows match {cost()}")
     print(f"\n{len(queries) - len(failures)}/{len(queries)} passing; "
           f"{len([n for n in queries if n in oracles])} oracle-checked")
+    print(f"total: {time.time() - t_all:.1f}s, {_next_job_id(ctx) - j_all} jobs")
     if failures:
         print("FAILURES:")
         for n, m in failures:
